@@ -67,10 +67,12 @@ object Bench {
     // classes don't land on its one measured run (measured: 2.0s first
     // run vs 0.48s warm for the same query at sf0.1 — the gap is class
     // generation, not data, which is ~17 MB and page-cached anyway).
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (_, fn) =>
+    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try fn(spark, "/root/testdata/sf0.001")
         .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] warmup $name failed: ${e.getMessage}")
+      }
     }
 
     // the warmup built session-cached index artifacts under the warmup

@@ -829,8 +829,8 @@ object Corpus {
         val vl = storage.appendVersionedOnto(s"${name}__lists", deltaLists,
           ptr(0).getAs[Long]("lists_version"))
         annPtrCommit(storage, name, centV, vl, curV, stale + nDelta)
-      } finally graft.operators.RelCache.freeLocalCheckpoint(cent)
-    } finally graft.operators.RelCache.freeLocalCheckpoint(delta)
+      } finally graft.operators.Artifacts.freeLocalCheckpoint(cent)
+    } finally graft.operators.Artifacts.freeLocalCheckpoint(delta)
   }
 
   /** Compact a persisted ANN index family: every nightly
@@ -1118,7 +1118,7 @@ object Corpus {
     // in the block manager for the session lifetime
     try rankModelFromPairs(pairs)
     catch { case t: Throwable =>
-      graft.operators.RelCache.freeLocalCheckpoint(pairs); throw t
+      graft.operators.Artifacts.freeLocalCheckpoint(pairs); throw t
     }
   }
 
@@ -1135,8 +1135,8 @@ object Corpus {
     // internals freed; the graph scaffolding can go once it returns
     try RankModel(pairs, GR.pageRank(edges, verts))
     finally {
-      graft.operators.RelCache.freeLocalCheckpoint(edges)
-      graft.operators.RelCache.freeLocalCheckpoint(verts)
+      graft.operators.Artifacts.freeLocalCheckpoint(edges)
+      graft.operators.Artifacts.freeLocalCheckpoint(verts)
     }
   }
 
@@ -1229,14 +1229,14 @@ object Corpus {
       val model =
         try rankModelFromPairs(folded)
         catch { case t: Throwable =>
-          graft.operators.RelCache.freeLocalCheckpoint(folded); throw t
+          graft.operators.Artifacts.freeLocalCheckpoint(folded); throw t
         }
       try {
         val vp = storage.putVersioned(s"${name}__pairs", model.pairs)
         val vr = storage.putVersioned(s"${name}__ranks", model.ranks)
         rankPtrCommit(storage, name, vp, vr, curV)
       } finally model.close()
-    } finally graft.operators.RelCache.freeLocalCheckpoint(delta)
+    } finally graft.operators.Artifacts.freeLocalCheckpoint(delta)
   }
 
   /** [[vacuumAnnIndex]] for a persisted rank-model family: retain the
@@ -1481,7 +1481,7 @@ object Corpus {
       hybridPtrCommit(storage, name, vp, vd,
         ptrLong(ptr, "lexdf_version"), curV, ptrLong(ptr, "n_docs"),
         ptrLong(ptr, "sum_dl"), ptrLong(ptr, "stale_docs", 0L) + nDelta)
-    } finally graft.operators.RelCache.freeLocalCheckpoint(delta)
+    } finally graft.operators.Artifacts.freeLocalCheckpoint(delta)
   }
 
   /** The slow-cadence EXACT lexical recalc — the second half of the
@@ -1867,8 +1867,8 @@ object Corpus {
           graft.operators.Similarity.kernelEncodePq(delta, cb), vk)
         ivfpqPtrCommit(storage, name, vCoarseNew, vb, vkNew, curV,
           stale + nDelta)
-      } finally graft.operators.RelCache.freeLocalCheckpoint(cent)
-    } finally graft.operators.RelCache.freeLocalCheckpoint(delta)
+      } finally graft.operators.Artifacts.freeLocalCheckpoint(cent)
+    } finally graft.operators.Artifacts.freeLocalCheckpoint(delta)
   }
 
   /** [[compactAnnIndex]] for a persisted IVF×PQ family: the coarse
@@ -2084,9 +2084,9 @@ object Corpus {
             Seq((vfNew, viNew, dCur, vCur))
               .toDF("fps_version", "index_version",
                 "docs_version", "vectors_version"))
-        } finally graft.operators.RelCache.freeLocalCheckpoint(newVecs)
-      } finally graft.operators.RelCache.freeLocalCheckpoint(cent)
-    } finally graft.operators.RelCache.freeLocalCheckpoint(deltaKept)
+        } finally graft.operators.Artifacts.freeLocalCheckpoint(newVecs)
+      } finally graft.operators.Artifacts.freeLocalCheckpoint(cent)
+    } finally graft.operators.Artifacts.freeLocalCheckpoint(deltaKept)
   }
 
   /** [[vacuumAnnIndex]] for a persisted pair-mining family (see
@@ -2431,12 +2431,15 @@ object Corpus {
     * checkpoint blocks freed. Returns the number of artifacts freed.
     * The complement of the handles' `close()`: handles free what YOU
     * built; this frees what the gated operators built behind the
-    * scenes. Growth is also bounded automatically (per-session LRU) —
-    * this is the eager form for pipelines that know a corpus is done.
+    * scenes. Growth is also bounded automatically: one LRU holds at
+    * most `graft.operators.Artifacts.MaxEntriesPerSession` (64)
+    * artifacts per session, counted across every family and corpus
+    * dir, and its automatic eviction only drops the reference — this
+    * is the eager form for pipelines that know a corpus is done.
     */
   def evictCaches(session: org.apache.spark.sql.SparkSession,
       dir: String): Int =
-    graft.operators.RelCache.evictCorpus(session, dir)
+    graft.operators.Artifacts.evictCorpus(session, dir)
 
   /** Hybrid more-like-this over YOUR frames (the gated `sim_hybrid`
     * fusion, SERVE POSTURE on both arms): for each doc id in

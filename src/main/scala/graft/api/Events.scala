@@ -346,7 +346,7 @@ object Events {
     require(vcs.nonEmpty, s"no versioned events table '$eventsTable'")
     val curV = vcs.last
     if (curV == sinceV) return storage.versions(s"${name}__gl").last
-    val free = graft.operators.RelCache.freeLocalCheckpoint _
+    val free = graft.operators.Artifacts.freeLocalCheckpoint _
     // pinned to curV — the version the pointer records as consumed
     // (resolving "latest" twice races a concurrent ingest append)
     val deltaAct = activityOf(

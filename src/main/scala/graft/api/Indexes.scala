@@ -43,8 +43,8 @@ final case class AnnIndex private[api] (
     * pinning every one until the session dies.
     */
   def close(): Unit = {
-    graft.operators.RelCache.freeLocalCheckpoint(centroids)
-    graft.operators.RelCache.freeLocalCheckpoint(lists)
+    graft.operators.Artifacts.freeLocalCheckpoint(centroids)
+    graft.operators.Artifacts.freeLocalCheckpoint(lists)
   }
 }
 
@@ -85,8 +85,8 @@ final case class IvfPqIndex private[api] (ann: AnnIndex,
     */
   def close(): Unit = {
     ann.close()
-    graft.operators.RelCache.freeLocalCheckpoint(codebooks)
-    graft.operators.RelCache.freeLocalCheckpoint(codes)
+    graft.operators.Artifacts.freeLocalCheckpoint(codebooks)
+    graft.operators.Artifacts.freeLocalCheckpoint(codes)
   }
 }
 
@@ -101,7 +101,7 @@ final case class HybridIndex private[api] (
 
   /** Release both arms' checkpoint blocks (see [[AnnIndex.close]]). */
   def close(): Unit = {
-    graft.operators.RelCache.freeLocalCheckpoint(postings)
+    graft.operators.Artifacts.freeLocalCheckpoint(postings)
     ann.close()
   }
 }
@@ -119,8 +119,8 @@ final case class RankModel private[api] (
 
   /** Release the model's checkpoint blocks (see [[AnnIndex.close]]). */
   def close(): Unit = {
-    graft.operators.RelCache.freeLocalCheckpoint(pairs)
-    graft.operators.RelCache.freeLocalCheckpoint(ranks)
+    graft.operators.Artifacts.freeLocalCheckpoint(pairs)
+    graft.operators.Artifacts.freeLocalCheckpoint(ranks)
   }
 }
 
@@ -137,7 +137,7 @@ final case class PairMiningBase private[api] (
 
   /** Release the base's checkpoint blocks (see [[AnnIndex.close]]). */
   def close(): Unit = {
-    graft.operators.RelCache.freeLocalCheckpoint(fingerprints)
+    graft.operators.Artifacts.freeLocalCheckpoint(fingerprints)
     index.close()
   }
 }
@@ -176,8 +176,8 @@ final case class Tokenizer private[api] (
 
   /** Release the checkpoint blocks (see [[AnnIndex.close]]). */
   def close(): Unit = {
-    graft.operators.RelCache.freeLocalCheckpoint(merges)
-    graft.operators.RelCache.freeLocalCheckpoint(vocab)
+    graft.operators.Artifacts.freeLocalCheckpoint(merges)
+    graft.operators.Artifacts.freeLocalCheckpoint(vocab)
   }
 }
 

@@ -124,7 +124,7 @@ object CcProbe {
       println(s"  agree=$agree")
       require(agree, "CC arms disagree!")
       Seq(edges, xfEdges, prop, star, drv, xf)
-        .foreach(RelCache.freeLocalCheckpoint)
+        .foreach(Artifacts.freeLocalCheckpoint)
     }
     spark.stop()
   }

@@ -80,11 +80,10 @@ object Dedup2 {
     * suffix-array stand-in) and runs both the report and the removal
     * from them. Values are `localCheckpoint`ed and identical by
     * construction (same kernel over the same scan), so both oracles
-    * are unchanged. Lifetime guards live in [[RelCache]].
+    * are unchanged. Lifetime guards live in [[Artifacts]].
     */
-  private[operators] def cachedWinRel(s: SparkSession, d: String): DataFrame =
-    semCache.getOrBuild((s, d, "spanwin"))(
-      winRel(documents(s, d), SpanWindow).localCheckpoint())
+  private[operators] val cachedWinRel = Artifacts.declare("spanwin")(
+    (s, d) => winRel(documents(s, d), SpanWindow))
 
   def duplicatedSpans(docs: DataFrame,
       window: Int = SpanWindow): DataFrame =
@@ -365,7 +364,7 @@ object Dedup2 {
     else {
       val ck = e.localCheckpoint()
       val out = connectedComponentsInstrumented(ck)._1
-      RelCache.freeLocalCheckpoint(ck)
+      Artifacts.freeLocalCheckpoint(ck)
       out
     }
   }
@@ -829,25 +828,16 @@ object Dedup2 {
     * deployment persists once (normalized vectors + bucket index).
     * Values are `localCheckpoint`ed, identical by construction to the
     * inline builds (same expressions over the same scan), so all
-    * oracle hashes are unchanged. Guards live in [[RelCache]].
+    * oracle hashes are unchanged. Guards live in [[Artifacts]].
     */
-  private val semCache =
-    new RelCache[(SparkSession, String, String)](_._1, _._2)
+  private[operators] val cachedNormEmbeddings = Artifacts.declare("semnorm")(
+    (s, d) => normRel(embeddings(s, d)))
 
-  private[operators] def cachedNormEmbeddings(s: SparkSession,
-      d: String): DataFrame =
-    semCache.getOrBuild((s, d, "semnorm"))(
-      normRel(embeddings(s, d)).localCheckpoint())
+  private[operators] val cachedSemBuckets = Artifacts.declare("sembuckets")(
+    (s, d) => bucketRel(embeddings(s, d)))
 
-  private[operators] def cachedSemBuckets(s: SparkSession,
-      d: String): DataFrame =
-    semCache.getOrBuild((s, d, "sembuckets"))(
-      bucketRel(embeddings(s, d)).localCheckpoint())
-
-  private[operators] def cachedSemCandidates(s: SparkSession,
-      d: String): DataFrame =
-    semCache.getOrBuild((s, d, "semcand"))(
-      candidatesFromBuckets(cachedSemBuckets(s, d)).localCheckpoint())
+  private[operators] val cachedSemCandidates = Artifacts.declare("semcand")(
+    (s, d) => candidatesFromBuckets(cachedSemBuckets(s, d)))
 
   /** Exact-edge semantic dedup: all-pairs cosine ≥
     * [[SemanticThreshold]] (the same bit-exact left-fold kernels as

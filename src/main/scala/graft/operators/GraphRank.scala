@@ -74,13 +74,13 @@ object GraphRank {
   /** The session-cached full rank table `(tok, w_total, rank_fp,
     * rank)` — built once per (session, dir), served by both gated
     * queries. [[pageRank]] already returns a materialized checkpoint
-    * (its own loop internals freed), so the cache wraps it directly —
-    * a second checkpoint here would orphan the inner one for the
+    * (its own loop internals freed), so the artifact store keeps it as
+    * is — a second checkpoint would orphan the inner one for the
     * session lifetime.
     */
-  private def cachedRanks(s: SparkSession, d: String): DataFrame = {
+  private val cachedRanks = Artifacts.declare("ranks") { (s, d) =>
     val (edges, verts) = cooccurrenceGraph(s, d)
-    grCache.getOrBuild((s, d, "ranks"))(pageRank(edges, verts))
+    pageRank(edges, verts)
   }
 
   /** Directed adjacent-pair counts `(w1, w2, n)` over non-stop,
@@ -89,13 +89,12 @@ object GraphRank {
     * output. Both the undirected graph and the keyphrase relation
     * derive from it without touching the corpus again.
     */
-  private def directedPairCounts(s: SparkSession, d: String): DataFrame =
-    grCache.getOrBuild((s, d, "dpc"))(
-      // the one corpus-sized pass reads the session's tokenized-corpus
-      // checkpoint (TextAnalysis.cachedTokRel) instead of re-tokenizing
-      // the raw text — same pairs by construction
-      pairCountsFromPairs(TextAnalysis.bigramPairRelFromToks(
-        TextAnalysis.cachedTokRel(s, d))).localCheckpoint())
+  private val directedPairCounts = Artifacts.declare("dpc")((s, d) =>
+    // the one corpus-sized pass reads the session's tokenized-corpus
+    // checkpoint (TextAnalysis.cachedTokRel) instead of re-tokenizing
+    // the raw text — same pairs by construction
+    pairCountsFromPairs(TextAnalysis.bigramPairRelFromToks(
+      TextAnalysis.cachedTokRel(s, d))))
 
   /** Frame-parametric form of the pair rollup over ANY `(doc_id,
     * text)` frame — the relation the persisted rank model stores,
@@ -126,13 +125,14 @@ object GraphRank {
     * from [[directedPairCounts]] — vocabulary-bounded work.
     */
   private[operators] def cooccurrenceGraph(s: SparkSession,
-      d: String): (DataFrame, DataFrame) = {
-    val edges = grCache.getOrBuild((s, d, "edges"))(
-      graphEdges(directedPairCounts(s, d)).localCheckpoint())
-    val verts = grCache.getOrBuild((s, d, "verts"))(
-      edges.select(col("src").as("tok")).distinct().localCheckpoint())
-    (edges, verts)
-  }
+      d: String): (DataFrame, DataFrame) =
+    (graphEdgesOf(s, d), graphVerts(s, d))
+
+  private val graphEdgesOf = Artifacts.declare("edges")((s, d) =>
+    graphEdges(directedPairCounts(s, d)))
+
+  private val graphVerts = Artifacts.declare("verts")((s, d) =>
+    graphEdgesOf(s, d).select(col("src").as("tok")).distinct())
 
   /** The undirected edge relation from ANY directed pair rollup
     * (lazy — callers materialize before iterating). tw via a window
@@ -148,9 +148,6 @@ object GraphRank {
       .withColumn("tw", sum(col("w")).over(bySrc))
       .withColumn("p", expr(s"(w * $PScale) DIV tw"))
   }
-
-  private val grCache =
-    new RelCache[(SparkSession, String, String)](_._1, _._2)
 
   /** Fixed-point PageRank over ANY prepared graph: `edges(src, dst,
     * tw, p)` with p the PScale-scaled transition probability, `verts
@@ -191,7 +188,7 @@ object GraphRank {
       // round — a 2-3-join lineage is well inside planner comfort
       if (i % 3 == 0 || i == Iterations) {
         ranks = ranks.localCheckpoint()
-        if (prevCk != null) RelCache.freeLocalCheckpoint(prevCk)
+        if (prevCk != null) Artifacts.freeLocalCheckpoint(prevCk)
         prevCk = ranks
       }
     }
@@ -206,7 +203,7 @@ object GraphRank {
       .localCheckpoint()
     // the consumer's checkpoint is materialized — the loop's final
     // internal one (prevCk == ranks) can go now
-    RelCache.freeLocalCheckpoint(prevCk)
+    Artifacts.freeLocalCheckpoint(prevCk)
     out
   }
 
@@ -379,8 +376,10 @@ object GraphRank {
     * contract, the same lead-bias every extractive baseline carries.
     */
   def taSummarize(s: SparkSession, d: String): DataFrame =
-    grCache.getOrBuild((s, d, "summ"))(summarize(documents(s, d)))
-      .orderBy(col("doc_id"))
+    cachedSummaries(s, d).orderBy(col("doc_id"))
+
+  private val cachedSummaries =
+    Artifacts.declare("summ")((s, d) => summarize(documents(s, d)))
 
   /** Hard per-document sentence bound — the quadratic-task guard (see
     * [[taSummarize]]). C(64, 2) ≈ 2k pairs is the worst single
@@ -400,7 +399,7 @@ object GraphRank {
     // out is materialized — the loop's final rank checkpoint can go;
     // leaving it would pin a sentence-count-sized block set per
     // invocation for the session lifetime
-    RelCache.freeLocalCheckpoint(finalCk)
+    Artifacts.freeLocalCheckpoint(finalCk)
     out
   }
 
@@ -471,7 +470,7 @@ object GraphRank {
       .join(db, "doc_id")
       .localCheckpoint()
     // edges is materialized — the pair join's blocks can go now
-    RelCache.freeLocalCheckpoint(pairs)
+    Artifacts.freeLocalCheckpoint(pairs)
     var ranks = edges
       .groupBy(col("doc_id"), col("src").as("sent_id"))
       .agg(min(col("r0")).as("r"))
@@ -490,13 +489,13 @@ object GraphRank {
           (col("base") + expr(s"($DampingNum * sc) DIV 100")).as("r"))
       if (i % 3 == 0 || i == Iterations) {
         ranks = ranks.localCheckpoint()
-        if (prevCk != null) RelCache.freeLocalCheckpoint(prevCk)
+        if (prevCk != null) Artifacts.freeLocalCheckpoint(prevCk)
         prevCk = ranks
       }
     }
     // the serve below references only the final rank checkpoint and
     // the (re-derived) sentence relation
-    RelCache.freeLocalCheckpoint(edges)
+    Artifacts.freeLocalCheckpoint(edges)
     val byDoc = Window.partitionBy(col("doc_id"))
       .orderBy(col("r").desc, col("sent_id"))
     val ranked = ranks

@@ -215,9 +215,8 @@ object Pipeline {
     * shared by [[pipeScrub]] and [[pipeTokenize]] — the scrub regexes
     * and the span chain run once, not once per consumer.
     */
-  private[operators] def cachedCleanedRel(s: SparkSession,
-      d: String): DataFrame =
-    cleanedRelCache.getOrBuild((s, d)) {
+  private[operators] val cachedCleanedRel =
+    Artifacts.declare("cleaned") { (s, d) =>
       def jtoks(c: org.apache.spark.sql.Column) =
         filter(split(c, "\\p{javaWhitespace}+"), t => length(t) > 0)
       val scr = Pii.piiScrubbed(
@@ -234,11 +233,7 @@ object Pipeline {
         .select(col("doc_id"), col("lang"), col("n_pii"),
           coalesce(col("n_removed"), lit(0L)).as("nr"),
           jtoks(coalesce(col("cleaned_text"), col("redacted"))).as("tt"))
-        .localCheckpoint()
     }
-
-  private val cleanedRelCache =
-    new RelCache[(SparkSession, String)](_._1, _._2)
 
   def pipeScrub(s: SparkSession, d: String): DataFrame = {
     val rel = cachedCleanedRel(s, d)
@@ -766,19 +761,12 @@ object Pipeline {
     * corpus) and each consumer projects its own view. The struct-min's
     * leading field is `doc_id` (unique), so the kept rows — and
     * [[keptVecIds]]'s min-id set — are identical by construction.
-    * Lifetime guards live in [[RelCache]].
+    * The plan-audit suite pins the partial-aggregated struct-min on the
+    * artifact's `build`, which the consumers' serve plans hide behind
+    * the checkpoint scan. Lifetime guards live in [[Artifacts]].
     */
-  private[operators] def cachedQaKept(s: SparkSession, d: String): DataFrame =
-    pairsIndexCache.getOrBuild((s, d, "qakept"))(
-      qaKeptBuildRel(documents(s, d)).localCheckpoint())
-
-  /** The un-materialized survivor-selection relation of
-    * [[cachedQaKept]] — split out (the [[qaCountedRel]] pattern) so the
-    * plan-audit suite can pin the partial-aggregated struct-min, which
-    * the consumers' serve plans hide behind the checkpoint scan.
-    */
-  private[graft] def qaKeptBuildRel(docs: DataFrame): DataFrame =
-    docs
+  private[graft] val cachedQaKept = Artifacts.declare("qakept")((s, d) =>
+    documents(s, d)
       .filter(size(toks) > 0 &&
         TextAnalysis.qualityScore(toks) >= QualityMin)
       .select(col("doc_id"), col("lang"), toks.as("t"),
@@ -786,7 +774,7 @@ object Pipeline {
       .groupBy(col("fp"))
       .agg(min(struct(col("doc_id"), col("lang"), col("t"))).as("k"))
       .select(col("k.doc_id").as("doc_id"), col("k.lang").as("lang"),
-        col("k.t").as("t"))
+        col("k.t").as("t")))
 
   def minedPairs(docs: DataFrame, vectors: DataFrame,
       k: Int = PairsK): DataFrame =
@@ -808,7 +796,7 @@ object Pipeline {
     // — nothing retains the frame after the mined result is consumed,
     // so the ContextCleaner frees the blocks on the next GC; only
     // session-cached frames (which stay strongly referenced) need the
-    // RelCache eviction machinery
+    // Artifacts eviction machinery
     val eKept = vectors.join(kept, "vec_id")
       .select(col("vec_id"), col("embedding"))
       .localCheckpoint()
@@ -871,14 +859,38 @@ object Pipeline {
   // mines positives against the persisted clean-corpus IVF index.
   // ---------------------------------------------------------------------
 
-  /** Session cache of the base (pre-batch) clean-corpus pair-mining
-    * index: centroids trained on the base KEPT corpus and its inverted
-    * lists — the persisted artifact a nightly contrastive-data
-    * pipeline probes each new batch against. Same posture as
-    * [[Similarity.cachedBaseIvf]]; guards in [[RelCache]].
+  /** The base (pre-batch) clean-corpus pair-mining index: the base
+    * survivor relation `(fp, vec_id)`, centroids trained on the base
+    * KEPT corpus and its inverted lists — the persisted artifacts a
+    * nightly contrastive-data pipeline probes each new batch against.
+    * Same posture as [[Similarity.ivfBaseLists]]. The base survivor
+    * relation is the dd_incremental "seen fingerprints" table; without
+    * it every batch run re-tokenizes the WHOLE base corpus just to
+    * know what yesterday kept (measured 8.7 s warm at the 10× probe
+    * vs 2.5 s with it cached — the difference between O(corpus) and
+    * O(batch) per nightly run).
     */
-  private val pairsIndexCache =
-    new RelCache[(SparkSession, String, String)](_._1, _._2)
+  private val pairsBaseKept = Artifacts.declare("pairs_basekept") { (s, d) =>
+    val docs = documents(s, d)
+    qualityFp(docs)
+      .filter(col("doc_id") < Similarity.upsertThreshold(docs.count()))
+      .groupBy(col("fp")).agg(min(col("doc_id")).as("vec_id"))
+  }
+
+  private def pairsBaseVecs(s: SparkSession, d: String): DataFrame =
+    embeddings(s, d)
+      .join(pairsBaseKept(s, d).select(col("vec_id")), "vec_id")
+      .select(col("vec_id"), col("embedding"))
+
+  private val pairsBaseCent = Artifacts.declare("pairs_cent") { (s, d) =>
+    val e = pairsBaseVecs(s, d)
+    val n = e.count()
+    Similarity.trainedCentroids(e, Similarity.numCellsFor(n), n)
+  }
+
+  private val pairsBaseLists = Artifacts.declare("pairs_lists")((s, d) =>
+    Similarity.kernelProbeCells(pairsBaseVecs(s, d), pairsBaseCent(s, d),
+      1, "c_id", "cv_c", "cn_c"))
 
   /** The quality-floor + prefix-fingerprint relation of [[minedPairs]]
     * — `(doc_id, fp)` for docs above the floor; the dedup key both the
@@ -907,7 +919,7 @@ object Pipeline {
     * batch-side QA scans the batch slice (the threshold pushes to the
     * parquet footer), assignment + probing run the one-pass centroid
     * kernel per batch vector, and the mining join touches only probed
-    * cells. The base index builds ONCE ([[pairsIndexCache]]) — exactly
+    * cells. The base index builds ONCE ([[pairsBaseLists]]) — exactly
     * what `SCALING.md`'s upsert ladder measures.
     */
   /** Frame-parametric core of [[pipePairsUpsert]]'s batch pass: QA the
@@ -939,32 +951,10 @@ object Pipeline {
   }
 
   def pipePairsUpsert(s: SparkSession, d: String): DataFrame = {
-    val S = Similarity
     val docs = documents(s, d)
-    val vectors = embeddings(s, d)
-    val thr = S.upsertThreshold(docs.count())
-    // the base survivor relation (fp, kept id) is itself a persisted
-    // artifact — the dd_incremental "seen fingerprints" table; without
-    // it every batch run re-tokenizes the WHOLE base corpus just to
-    // know what yesterday kept (measured 8.7 s warm at the 10× probe
-    // vs 2.5 s with it cached — the difference between O(corpus) and
-    // O(batch) per nightly run)
-    val baseKept = pairsIndexCache.getOrBuild((s, d, "basekept"))(
-      qualityFp(docs).filter(col("doc_id") < thr)
-        .groupBy(col("fp")).agg(min(col("doc_id")).as("vec_id"))
-        .localCheckpoint())
-    def eBase = vectors
-      .join(baseKept.select(col("vec_id")), "vec_id")
-      .select(col("vec_id"), col("embedding"))
-    val cent = pairsIndexCache.getOrBuild((s, d, "cent")) {
-      val n = eBase.count()
-      S.trainedCentroids(eBase, S.numCellsFor(n), n).localCheckpoint()
-    }
-    val baseLists = pairsIndexCache.getOrBuild((s, d, "lists"))(
-      S.kernelProbeCells(eBase, cent, 1, "c_id", "cv_c", "cn_c")
-        .localCheckpoint())
-    minedPairsUpsert(docs.filter(col("doc_id") >= thr), vectors,
-      cent, baseLists, baseKept)
+    val thr = Similarity.upsertThreshold(docs.count())
+    minedPairsUpsert(docs.filter(col("doc_id") >= thr), embeddings(s, d),
+      pairsBaseCent(s, d), pairsBaseLists(s, d), pairsBaseKept(s, d))
       .orderBy(col("q_id"), col("rank"))
   }
 

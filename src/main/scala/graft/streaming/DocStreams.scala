@@ -443,12 +443,9 @@ object DocStreams {
     * linear postings build per execution (measured 36 s at the 100×
     * probe corpus vs ~1 s serve-only).
     */
-  private val postingsCache =
-    new graft.operators.RelCache[(SparkSession, String)](_._1, _._2)
-  private[graft] def cachedPostings(s: SparkSession,
-      d: String): DataFrame =
-    postingsCache.getOrBuild((s, d))(
-      bm25Postings(graft.sources.Tables.documents(s, d)).localCheckpoint())
+  private[graft] val cachedPostings = graft.operators.Artifacts
+    .declare("postings")((s, d) =>
+      bm25Postings(graft.sources.Tables.documents(s, d)))
 
   def bm25Serve(queries: DataFrame, corpus: DataFrame,
       k: Int = TextAnalysis.Bm25TopDocs,

@@ -134,7 +134,7 @@ object RefreshProbe {
           s"$total corpus vectors")
       println(f"crashed-night orphan=$tHalf%5.1fs rerun=$tRerun%5.1fs " +
         f"lists=$listed%d == corpus=$total%d (no double-index)")
-      graft.operators.RelCache.freeLocalCheckpoint(cent)
+      graft.operators.Artifacts.freeLocalCheckpoint(cent)
       loaded.close()
       lo = hi
     }

@@ -201,16 +201,21 @@ class PlanAuditSpec extends SparkTestBase {
     // pipe_e2e's serve plan reads the session-cached QA-survivor
     // checkpoint, so the survivor selection is pinned on the BUILD
     // relation (the same split as pipe_qa below)
-    val keptBuild = graft.operators.Pipeline
-      .qaKeptBuildRel(graft.sources.Tables.documents(spark, sf0001))
+    val keptBuild = graft.operators.Pipeline.cachedQaKept.build(spark, sf0001)
       .queryExecution.explainString(SimpleMode)
-    assert(keptBuild.contains("partial_min"),
-      s"QA-survivor selection must partial-aggregate:\n$keptBuild")
+    // the survivor-selection markers: the md5 fingerprint and the
+    // partial min keyed on it
+    def selectsSurvivors(p: String): Boolean = p.contains("md5(") &&
+      p.linesIterator.exists(_.matches(".*keys?=\\[fp#.*partial_min.*"))
+    assert(selectsSurvivors(keptBuild),
+      s"QA-survivor selection must partial-aggregate on fp:\n$keptBuild")
     assert(!keptBuild.contains("windowspecdefinition(fp"),
       s"QA-survivor selection must not window over fp:\n$keptBuild")
     val e2eServe = plan("pipe_e2e")
     assert(e2eServe.contains("ExistingRDD") || e2eServe.contains("LogicalRDD"),
       s"pipe_e2e's serve plan must replay the survivor checkpoint:\n$e2eServe")
+    assert(!e2eServe.contains("md5(") && !selectsSurvivors(e2eServe),
+      s"pipe_e2e must not rebuild the survivor selection inline:\n$e2eServe")
     // pipe_qa's serve plan reads its (doc_id, n_tokens) checkpoint, so
     // the survivor selection is pinned on the BUILD relation (the
     // sim_ivf train/serve split pattern)
@@ -461,7 +466,7 @@ class PlanAuditSpec extends SparkTestBase {
     val (lazyOut, finalCk) = graft.operators.GraphRank.summarizeBuild(
       graft.sources.Tables.documents(spark, sf0001))
     val p = lazyOut.queryExecution.explainString(SimpleMode)
-    graft.operators.RelCache.freeLocalCheckpoint(finalCk)
+    graft.operators.Artifacts.freeLocalCheckpoint(finalCk)
     assert(!p.contains("CartesianProduct") &&
       !p.contains("BroadcastNestedLoopJoin"),
       s"the sentence-pair join must stay an equi-join on (doc_id, tok):\n$p")

@@ -1,10 +1,17 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.sql.DataFrame
 
 import graft.SparkTestBase
 
+/** Lifetime guarantees of the session artifact store ([[Artifacts]]):
+  * at-most-once builds, eager freeing on explicit eviction, and an LRU
+  * bound that never frees a frame it handed out.
+  */
 class RelCacheSpec extends SparkTestBase {
+  import RelCacheSpec.{builds, tiny}
 
   /** RDD ids currently persisted in the shared session's context. */
   private def persistedIds: Set[Int] =
@@ -20,79 +27,79 @@ class RelCacheSpec extends SparkTestBase {
     ids.toSet
   }
 
-  test("evictWhere frees the evicted entry's checkpoint blocks") {
-    val cache = new RelCache[(SparkSession, String)](_._1, _._2)
-    var builds = 0
-    def build(): DataFrame = {
-      builds += 1
-      spark.range(100).toDF("x").localCheckpoint()
-    }
-    val df = cache.getOrBuild((spark, "/corpus/a"))(build())
+  test("an explicit evict frees the evicted entry's checkpoint blocks") {
+    val before = builds.get
+    val df = tiny(spark, "/corpus/a")
     val ids = idsOf(df)
-    assert(ids.nonEmpty, "localCheckpoint must register a persisted RDD")
-    assert(ids.subsetOf(persistedIds), "blocks live while cached")
+    assert(ids.nonEmpty, "the store must localCheckpoint the build")
+    assert(ids.subsetOf(persistedIds), "blocks live while stored")
     // a second access is a hit, not a rebuild
-    cache.getOrBuild((spark, "/corpus/a"))(build())
-    assert(builds == 1)
-    assert(cache.evictWhere(_._2 == "/corpus/a") == 1)
+    tiny(spark, "/corpus/a")
+    assert(builds.get == before + 1)
+    assert(Artifacts.evictCorpus(spark, "/corpus/a") == 1)
     assert(ids.intersect(persistedIds).isEmpty,
       "eviction must unpersist the checkpointed RDD")
     // an evicted key rebuilds on next use
-    cache.getOrBuild((spark, "/corpus/a"))(build())
-    assert(builds == 2)
+    tiny(spark, "/corpus/a")
+    assert(builds.get == before + 2)
+    Artifacts.evictCorpus(spark, "/corpus/a")
   }
 
   test("the per-session LRU bound evicts the least recently used entry without killing handed-out frames") {
-    val cache = new RelCache[(SparkSession, String)](_._1, _._2,
-      maxPerSession = 2)
-    def build(n: Int): DataFrame =
-      spark.range(n).toDF("x").localCheckpoint()
-    val a = cache.getOrBuild((spark, "a"))(build(1))
-    val b = cache.getOrBuild((spark, "b"))(build(2))
-    val aIds = idsOf(a)
-    val bIds = idsOf(b)
-    // touch a so b is now the LRU entry
-    var rebuiltA = false
-    cache.getOrBuild((spark, "a")) { rebuiltA = true; build(1) }
-    assert(!rebuiltA, "a is cached; the touch must be a hit")
-    val c = cache.getOrBuild((spark, "c"))(build(3))
-    // automatic eviction drops only the map reference: the frame `b`
-    // this test still holds (standing in for a caller mid-consumption)
-    // must stay usable — its checkpoint blocks are the ContextCleaner's
-    // to reclaim once the last reference is GC'd, never evictOne's
-    assert(bIds.subsetOf(persistedIds),
+    val dirs = (0 to Artifacts.MaxEntriesPerSession).map(i => s"/lru/$i")
+    // fill the session to the bound: every older entry (other suites'
+    // artifacts included) is now less recently used than these
+    val frames = dirs.init.map(tiny(spark, _))
+    // touch dirs(0) so dirs(1) is the LRU entry
+    val before = builds.get
+    tiny(spark, dirs(0))
+    assert(builds.get == before, "dirs(0) is stored; the touch must be a hit")
+    val last = tiny(spark, dirs.last)
+    // automatic eviction drops only the map reference: the frame this
+    // test still holds (standing in for a caller mid-consumption) must
+    // stay usable — its blocks are the ContextCleaner's to reclaim
+    val lru = frames(1)
+    assert(idsOf(lru).subsetOf(persistedIds),
       "auto-LRU eviction must not eagerly free a possibly-in-use checkpoint")
-    assert(b.count() == 2L, "the handed-out frame must survive eviction")
-    assert(aIds.subsetOf(persistedIds) && idsOf(c).subsetOf(persistedIds),
+    assert(lru.count() == dirs(1).length.toLong,
+      "the handed-out frame must survive eviction")
+    assert(idsOf(frames(0)).subsetOf(persistedIds) &&
+      idsOf(last).subsetOf(persistedIds),
       "recently used entries keep their blocks")
-    // b rebuilds on next use (the reference is gone from the map)
-    var rebuiltB = false
-    cache.getOrBuild((spark, "b")) { rebuiltB = true; build(2) }
-    assert(rebuiltB)
+    val afterFill = builds.get
+    tiny(spark, dirs(0))
+    assert(builds.get == afterFill, "the touched entry survived the bound")
+    // dirs(1) rebuilds on next use (its reference left the store)
+    tiny(spark, dirs(1))
+    assert(builds.get == afterFill + 1)
     // the explicit verb DOES free eagerly — the caller-contract split
-    cache.evictWhere(_._2 == "c")
-    assert(idsOf(c).intersect(persistedIds).isEmpty,
-      "explicit evictWhere must free the evicted entry's blocks")
+    Artifacts.evictCorpus(spark, dirs.last)
+    assert(idsOf(last).intersect(persistedIds).isEmpty,
+      "explicit eviction must free the evicted entry's blocks")
+    dirs.foreach(Artifacts.evictCorpus(spark, _))
   }
 
-  test("RelCache.evictCorpus retires a corpus dir across every registered cache") {
-    val c1 = new RelCache[(SparkSession, String)](_._1, _._2)
-    val c2 = new RelCache[(SparkSession, String, String)](_._1, _._2)
-    val d1 = c1.getOrBuild((spark, "/corpus/x"))(
-      spark.range(10).toDF("x").localCheckpoint())
-    val d2 = c2.getOrBuild((spark, "/corpus/x", "lists"))(
-      spark.range(20).toDF("x").localCheckpoint())
-    val keep = c1.getOrBuild((spark, "/corpus/y"))(
-      spark.range(30).toDF("x").localCheckpoint())
-    val freed = RelCache.evictCorpus(spark, "/corpus/x")
-    assert(freed >= 2, s"both caches' /corpus/x entries must retire: $freed")
-    assert(idsOf(d1).intersect(persistedIds).isEmpty)
-    assert(idsOf(d2).intersect(persistedIds).isEmpty)
+  test("Corpus.evictCaches frees every artifact of a dir, not another dir's") {
+    graft.SparkEntry.queries // initializes every declaring operator object
+    val keep = tiny(spark, "/corpus/y")
+    val built = Artifacts.all.map(a => a.name -> idsOf(a(spark, sf0001)))
+    assert(built.forall(_._2.nonEmpty), built)
+    val ids = built.flatMap(_._2).toSet
+    assert(ids.subsetOf(persistedIds), "blocks live while stored")
+    assert(graft.api.Corpus.evictCaches(spark, sf0001) == built.size)
+    assert(ids.intersect(persistedIds).isEmpty,
+      "every artifact of the dir must be freed")
     assert(idsOf(keep).subsetOf(persistedIds),
       "another corpus's artifacts must survive")
-    // the facade delegates to the same registry
-    assert(graft.api.Corpus.evictCaches(spark, "/corpus/y") >= 1)
+    assert(graft.api.Corpus.evictCaches(spark, "/corpus/y") == 1)
     assert(idsOf(keep).intersect(persistedIds).isEmpty)
+  }
+
+  test("a duplicate artifact name is rejected at declaration") {
+    graft.SparkEntry.queries
+    intercept[IllegalArgumentException] {
+      Artifacts.declare("tokrel")((s, _) => s.range(1).toDF("x"))
+    }
   }
 
   test("AnnIndex.close frees the handle's centroid and list blocks") {
@@ -109,5 +116,15 @@ class RelCacheSpec extends SparkTestBase {
     idx.close()
     assert(ids.intersect(persistedIds).isEmpty,
       "close() must unpersist the index artifacts")
+  }
+}
+
+object RelCacheSpec {
+  private[operators] val builds = new AtomicInteger
+
+  /** A tiny artifact whose row count is its dir name's length. */
+  private[operators] val tiny: Artifact = Artifacts.declare("spec.tiny") { (s, d) =>
+    builds.incrementAndGet()
+    s.range(d.length).toDF("x")
   }
 }
