@@ -2241,8 +2241,11 @@ object Corpus {
     *    the loop is caught up; grows with un-refreshed appends), and
     *    the corpus's own dir count at head.
     *
-    * Metadata-only (pointer reads + manifest listings, zero data
-    * scans) — safe to poll from a dashboard at any cadence. That
+    * Metadata-only: manifest listings, plus one small Spark job per
+    * pointer read (the collect of its one-row table; the manifest's
+    * `#schema=` spares the schema-inference job), and no scan of any
+    * artifact or corpus data — safe to poll from a dashboard at any
+    * cadence. That
     * contract extends to BROKEN families: a torn or malformed pointer
     * table (wrong row count, missing columns — e.g. a half-migrated
     * save or a foreign table that happens to share the suffix) emits

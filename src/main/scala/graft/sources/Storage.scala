@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** The reference's storage verbs (SURVEY.md §2a: put/get/delete/ls/info,
   * `dfs/client/client.go:767-823`) over a warehouse directory.
@@ -430,12 +431,16 @@ class Storage(spark: SparkSession, warehouse: String) {
     * (manifest metadata, e.g. the high-water batch id) are not dirs.
     */
   private def readManifest(name: String, v: Long): Seq[String] =
-    manifestLines(name, v).filterNot(_.startsWith("#"))
+    dirsOf(manifestLines(name, v))
+
+  private def dirsOf(lines: Seq[String]): Seq[String] =
+    lines.filterNot(_.startsWith("#"))
 
   private val HwHeader = "#hw=(-?\\d+)".r
   private val EpochHeader = "#epoch=(\\d+)".r
   private val WriterHeader = "#writer=(.+)".r
   private val BaseHeader = "#base=(\\d+)".r
+  private val SchemaHeader = "#schema=(.+)".r
   private val BatchDirName = "data/b(\\d+)".r
   private val EpochBatchDirName = "data/e(\\d+)b(\\d+)".r
 
@@ -461,9 +466,17 @@ class Storage(spark: SparkSession, warehouse: String) {
     *    directory list was re-packed. What lets [[readVersionedSince]]
     *    compute an exact delta ACROSS a compaction instead of refusing:
     *    delta(after → this) = delta(after → base).
+    *  - `schema` — the snapshot's schema as the parquet reader reports
+    *    it ([[readerSchema]]), recorded only when every data directory
+    *    of the manifest was written with it: the file's metadata record
+    *    (the controller's `Metadata`, `proto/dfs.proto:5-12`), so
+    *    [[readVersioned]] opens no footer — on Spark 4.1 a schema-less
+    *    read runs a one-task footer job inside analysis. Absent on
+    *    pre-header manifests, after a schema-evolving append, and on
+    *    commits built on either; those snapshots infer their schema.
     */
   private case class VtHeaders(hw: Long, epoch: Long, writer: Option[String],
-      base: Option[Long] = None)
+      base: Option[Long] = None, schema: Option[StructType] = None)
 
   private def headersOf(name: String, v: Long): VtHeaders =
     headersOf(manifestLines(name, v))
@@ -483,8 +496,35 @@ class Storage(spark: SparkSession, warehouse: String) {
     val hw = (lines.collectFirst { case HwHeader(n) => n.toLong }.toSeq ++
       fromDirs).foldLeft(-1L)(math.max)
     VtHeaders(hw, epoch, writer,
-      lines.collectFirst { case BaseHeader(n) => n.toLong })
+      lines.collectFirst { case BaseHeader(n) => n.toLong },
+      lines.collectFirst { case SchemaHeader(j) =>
+        DataType.fromJson(j).asInstanceOf[StructType] })
   }
+
+  /** `t` as the parquet reader reports it after a write: names, types
+    * and field metadata kept, every field, array element and map value
+    * nullable (the reader erases the writer's nullability). The form
+    * the `#schema=` header records and the append gate compares in.
+    */
+  private def readerType(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = readerType(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(readerType(a.elementType), containsNull = true)
+    case m: MapType =>
+      MapType(readerType(m.keyType), readerType(m.valueType), valueContainsNull = true)
+    case other => other
+  }
+
+  private def readerSchema(df: DataFrame): StructType =
+    readerType(df.schema).asInstanceOf[StructType]
+
+  /** The `#schema=` an append onto a manifest with headers `base`
+    * records: the base's, iff the batch writes that same schema — a
+    * batch that evolves it (or a base that already lacks one) leaves
+    * the new snapshot to schema inference.
+    */
+  private def appendedSchema(base: VtHeaders, df: DataFrame): Option[StructType] =
+    base.schema.filter(_ == readerSchema(df))
 
   /** The one commit path for every versioned-table verb: optionally
     * write a new immutable data directory, then publish manifest
@@ -498,9 +538,17 @@ class Storage(spark: SparkSession, warehouse: String) {
     * lakehouse-format commit protocol (HDFS/object-store rename is the
     * atomic primitive; on a raw local FS the pre-rename existence
     * check closes all but a microscopic window).
+    *
+    * The manifest's `#`-header lines ([[VtHeaders]]) precede the
+    * directory list: `#hw=`, `#epoch=`, `#writer=`, `#base=`, and
+    * `#schema=` from the `schema` each verb passes — the frame it
+    * writes (put, compaction), its base's if the batch matches it
+    * ([[appendedSchema]]), or the re-published manifest's (rollback,
+    * takeover); None writes no `#schema=`.
     */
   private def commitVersion(name: String, df: Option[DataFrame],
-      dirs: Seq[String], expected: Option[Long] = None,
+      dirs: Seq[String], schema: Option[StructType],
+      expected: Option[Long] = None,
       newBatchId: Option[Long] = None,
       epochBump: Boolean = false,
       claimWriter: Option[String] = None,
@@ -546,7 +594,8 @@ class Storage(spark: SparkSession, warehouse: String) {
       (if (hw >= 0 || epoch > 0) Seq(s"#hw=$hw") else Nil) ++
         (if (epoch > 0) Seq(s"#epoch=$epoch") else Nil) ++
         writer.map(w => s"#writer=$w").toSeq ++
-        contentBase.map(b => s"#base=$b").toSeq
+        contentBase.map(b => s"#base=$b").toSeq ++
+        schema.map(s => s"#schema=${s.json}").toSeq
     fs.mkdirs(vtManifests(name))
     // the tmp manifest is per-ATTEMPT unique for the same reason the
     // data dir is: two racing commits targeting the same version would
@@ -621,7 +670,8 @@ class Storage(spark: SparkSession, warehouse: String) {
       contentEqualTo: Option[Long] = None): Long = {
     contentEqualTo.foreach(b => require(versions(name).contains(b),
       s"'$name' has no committed version $b to claim content-equality to"))
-    commitVersion(name, Some(df), Nil, contentBase = contentEqualTo)
+    commitVersion(name, Some(df), Nil, Some(readerSchema(df)),
+      contentBase = contentEqualTo)
   }
 
   /** Append a batch to a versioned table as a new version: writes ONLY
@@ -648,7 +698,9 @@ class Storage(spark: SparkSession, warehouse: String) {
     require(vs.contains(cur),
       s"'$name' has no version $cur to append on (has: ${vs.mkString(",")})")
     checkAppendSchema(name, cur, df, allowSchemaEvolution)
-    commitVersion(name, Some(df), readManifest(name, cur), Some(cur))
+    val lines = manifestLines(name, cur)
+    commitVersion(name, Some(df), dirsOf(lines),
+      appendedSchema(headersOf(lines), df), Some(cur))
   }
 
   /** Append ONTO a PINNED base snapshot: commit a new version whose
@@ -681,11 +733,13 @@ class Storage(spark: SparkSession, warehouse: String) {
       s"'$name' has no version $baseVersion to append onto " +
         s"(has: ${vs.mkString(",")})")
     checkAppendSchema(name, baseVersion, df, allowSchemaEvolution)
-    val base = readManifest(name, baseVersion)
+    val lines = manifestLines(name, baseVersion)
+    val base = dirsOf(lines)
+    val schema = appendedSchema(headersOf(lines), df)
     var attempt = 0
     while (true) {
       attempt += 1
-      try return commitVersion(name, Some(df), base)
+      try return commitVersion(name, Some(df), base, schema)
       catch {
         case _: ConcurrentCommitException if attempt < 8 =>
         // lost the version-number race: re-commit the SAME pinned
@@ -708,9 +762,13 @@ class Storage(spark: SparkSession, warehouse: String) {
     * `dfs/controller/controller.go:64-77`, never reconciled).
     * Widened appends (`allowSchemaEvolution = true`) compose with
     * `readVersioned(mergeSchema = true)` on the read side.
-    * Cost: one footer read of the current version (schema only), no
-    * data scan. Name resolution is case-insensitive, matching Spark's
-    * default analyzer.
+    * Cost: none beyond the manifest read when the current version
+    * records its `#schema=`; otherwise one footer read (schema only),
+    * no data scan. Types compare as the reader reports them, so a
+    * nullability-only difference (a batch's non-null array elements vs
+    * the table's read-back nullable ones) is not a conflict. Name
+    * resolution is case-insensitive, matching Spark's default
+    * analyzer.
     */
   private def checkAppendSchema(name: String, cur: Long, df: DataFrame,
       allowSchemaEvolution: Boolean): Unit = {
@@ -720,7 +778,8 @@ class Storage(spark: SparkSession, warehouse: String) {
     val tf = table.fields.map(f => key(f) -> f).toMap
     val bf = batch.fields.map(f => key(f) -> f).toMap
     val conflicts = table.fields.toSeq.flatMap { f =>
-      bf.get(key(f)).filter(_.dataType != f.dataType)
+      bf.get(key(f))
+        .filter(b => readerType(b.dataType) != readerType(f.dataType))
         .map(b => s"${f.name}: table ${f.dataType.simpleString} vs " +
           s"batch ${b.dataType.simpleString}")
     }
@@ -813,7 +872,7 @@ class Storage(spark: SparkSession, warehouse: String) {
       attempt += 1
       val vs = versions(checkName(name))
       val latestLines = vs.lastOption.map(manifestLines(name, _))
-      val base = latestLines.map(_.filterNot(_.startsWith("#"))).getOrElse(Nil)
+      val base = latestLines.map(dirsOf).getOrElse(Nil)
       val hdr = latestLines.map(headersOf).getOrElse(VtHeaders(-1L, 0L, None))
       hdr.writer.filter(w => w != writer).foreach { w =>
         throw new IllegalStateException(
@@ -854,7 +913,10 @@ class Storage(spark: SparkSession, warehouse: String) {
       // the batch-id-named dir is immutable once written: retries of
       // the commit race reuse it rather than re-running the batch plan
       if (!written) { df.write.parquet(dir.toString); written = true }
-      try return Some(commitVersion(name, None, base :+ tag,
+      // a first batch creates the table: its frame is the snapshot
+      val schema = if (vs.isEmpty) Some(readerSchema(df))
+        else appendedSchema(hdr, df)
+      try return Some(commitVersion(name, None, base :+ tag, schema,
         Some(vs.lastOption.getOrElse(0L)), newBatchId = Some(batchId),
         claimWriter = Some(writer).filter(_.nonEmpty)))
       catch {
@@ -889,7 +951,9 @@ class Storage(spark: SparkSession, warehouse: String) {
     require(newWriter.nonEmpty, "newWriter token must be non-empty")
     val vs = versions(checkName(name))
     require(vs.nonEmpty, s"no versioned table '$name' to take over")
-    commitVersion(name, None, readManifest(name, vs.last), Some(vs.last),
+    val lines = manifestLines(name, vs.last)
+    commitVersion(name, None, dirsOf(lines),
+      headersOf(lines).schema, Some(vs.last),
       epochBump = true, claimWriter = Some(newWriter))
   }
 
@@ -955,8 +1019,9 @@ class Storage(spark: SparkSession, warehouse: String) {
       s"'$name' has no version $cur (has: ${vs.mkString(",")})")
     // the commit is CONTENT-EQUAL to `cur` — recorded as `#base=` so
     // incremental readers can diff straight through the re-pack
-    commitVersion(name, Some(readVersioned(name, cur)), Nil, Some(cur),
-      contentBase = Some(cur))
+    val snapshot = readVersioned(name, cur)
+    commitVersion(name, Some(snapshot), Nil, Some(readerSchema(snapshot)),
+      Some(cur), contentBase = Some(cur))
   }
 
   /** Physically reclaim a versioned table's history: retain the last
@@ -1077,13 +1142,22 @@ class Storage(spark: SparkSession, warehouse: String) {
           s"'$name' has no version $version (has: ${vs.mkString(",")})")
         version
       }
-    val paths = readManifest(name, v)
-      .map(d => new Path(vtRoot(name), d).toString)
-    // mergeSchema=true is the schema-evolution read: batches appended
-    // with added columns union into one widened schema (absent columns
-    // null-fill). Off by default — the merged-footer scan pass costs
-    // on wide tables and most readers want the latest writer's schema.
-    spark.read.option("mergeSchema", mergeSchema).parquet(paths: _*)
+    val lines = manifestLines(name, v)
+    readDirs(name, dirsOf(lines), headersOf(lines).schema, mergeSchema)
+  }
+
+  /** The one parquet read of versioned data directories: given a
+    * recorded `schema` (the `#schema=` header), analysis opens no
+    * footer. mergeSchema=true is the schema-evolution read — batches
+    * appended with added columns union into one widened schema (absent
+    * columns null-fill) — so it always infers, from every footer. Off
+    * by default: the merged-footer scan pass costs on wide tables.
+    */
+  private def readDirs(name: String, dirs: Seq[String],
+      schema: Option[StructType], mergeSchema: Boolean): DataFrame = {
+    val reader = spark.read.option("mergeSchema", mergeSchema)
+    schema.filterNot(_ => mergeSchema).fold(reader)(reader.schema)
+      .parquet(dirs.map(d => new Path(vtRoot(name), d).toString): _*)
   }
 
   /** The versioned-table names present in this warehouse — the catalog
@@ -1125,7 +1199,7 @@ class Storage(spark: SparkSession, warehouse: String) {
     val rows = vs.reverse.map { v =>
       val lines = manifestLines(name, v)
       val hdr = headersOf(lines)
-      val dirs = lines.filterNot(_.startsWith("#"))
+      val dirs = dirsOf(lines)
       (v, dirs.size, dirs.map(bytesOf).sum, hdr.hw, hdr.epoch,
         hdr.writer.orNull, hdr.base.map(java.lang.Long.valueOf).orNull)
     }
@@ -1213,8 +1287,14 @@ class Storage(spark: SparkSession, warehouse: String) {
       }
     val delta = deltaDirsSince(name, vs, afterVersion, to).distinct
     if (delta.isEmpty) readVersioned(name, to, mergeSchema).limit(0)
-    else spark.read.option("mergeSchema", mergeSchema)
-      .parquet(delta.map(d => new Path(vtRoot(name), d).toString): _*)
+    else {
+      // `to`'s recorded schema vouches for `to`'s own directories only;
+      // a window reaching directories a re-snapshot dropped infers
+      val toLines = manifestLines(name, to)
+      val schema = headersOf(toLines).schema
+        .filter(_ => delta.toSet.subsetOf(dirsOf(toLines).toSet))
+      readDirs(name, delta, schema, mergeSchema)
+    }
   }
 
   /** The directories holding rows added between committed versions
@@ -1243,9 +1323,9 @@ class Storage(spark: SparkSession, warehouse: String) {
       .collectFirst { case (v, lines)
         if headersOf(lines).base.isDefined &&
           (v == to ||
-            lines.filterNot(_.startsWith("#")).toSet.subsetOf(toDirs.toSet)) =>
+            dirsOf(lines).toSet.subsetOf(toDirs.toSet)) =>
         (v, headersOf(lines).base.get,
-          lines.filterNot(_.startsWith("#")).toSet)
+          dirsOf(lines).toSet)
       } match {
         case Some((c, base, dirs)) =>
           if (base < after)
@@ -1276,8 +1356,9 @@ class Storage(spark: SparkSession, warehouse: String) {
     require(versions(name).contains(to),
       s"'$name' has no version $to to roll back to")
     checkMaintenanceFence(name, writer, force, "rollback")
-    commitVersion(name, None, readManifest(name, to),
-      contentBase = Some(to))
+    val lines = manifestLines(name, to)
+    commitVersion(name, None, dirsOf(lines),
+      headersOf(lines).schema, contentBase = Some(to))
   }
 
   def delete(name: String): Boolean = {

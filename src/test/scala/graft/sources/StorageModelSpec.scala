@@ -15,7 +15,8 @@ import graft.SparkTestBase
   *
   *  - `versions` equals the model's retained version ids;
   *  - `readVersioned(latest)` and time travel to any retained version
-  *    equal the model's content for that version;
+  *    equal the model's content for that version, with the schema
+  *    inference over that version's directories reports;
   *  - `readVersionedSince(v)` either returns EXACTLY the rows added
   *    after `v` (success implies correctness — the content-equal
   *    `#base=` chain must never fabricate or drop a row, whatever
@@ -62,8 +63,8 @@ class StorageModelSpec extends SparkTestBase {
 
   private def fuzz(seed: Long): Unit = {
     val rnd = new scala.util.Random(seed)
-    val st = new Storage(spark,
-      Files.createTempDirectory(s"graft-fuzz$seed-").toString)
+    val wh = Files.createTempDirectory(s"graft-fuzz$seed-").toString
+    val st = new Storage(spark, wh)
     val name = s"fuzz$seed"
     def df(xs: Seq[Long]) = xs.map(Tuple1(_)).toDF("x")
     var nextRow = 0L
@@ -170,10 +171,15 @@ class StorageModelSpec extends SparkTestBase {
       // compare as sorted SEQUENCES, not sets: row values are unique
       // by construction, so a duplicate — the double-indexing failure
       // class the idempotent machinery exists to prevent — shows up
-      // as a longer sequence instead of vanishing into a set
-      def read(v: Long): Seq[Long] =
-        st.readVersioned(name, v).collect().map(_.getLong(0))
-          .sorted.toSeq
+      // as a longer sequence instead of vanishing into a set. The
+      // schema a read reports (the manifest's `#schema=` when it has
+      // one) must be the one inference over its directories reports.
+      def read(v: Long): Seq[Long] = {
+        val got = st.readVersioned(name, v)
+        assert(got.schema == VersionedFiles.inferred(spark, wh, name, v).schema,
+          s"seed=$seed op=$op: schema of $v diverged from inference")
+        got.collect().map(_.getLong(0)).sorted.toSeq
+      }
       assert(read(model.last._1) == model.last._2.toSeq.sorted,
         s"seed=$seed op=$op: latest content diverged")
       // time travel to a random retained version

@@ -696,6 +696,28 @@ class StorageSpec extends SparkTestBase {
     assert(st.readVersioned("sg", mergeSchema = true).count() == 3)
   }
 
+  test("schema gate: a nullability-only difference appends; a real type change still refuses naming the field") {
+    val st = freshStorage()
+    st.putVersioned("nul", spark.range(0, 3)
+      .selectExpr("id", "array(cast(id as float), 1.0f) as embedding"))
+    // the table reads back array<float> with nullable elements; the
+    // batch's elements are non-null — the same type to the reader
+    assert(st.readVersioned("nul").schema("embedding").dataType ==
+      org.apache.spark.sql.types.ArrayType(
+        org.apache.spark.sql.types.FloatType, containsNull = true))
+    assert(st.appendVersioned("nul", spark.range(3, 5)
+      .selectExpr("id", "array(cast(id as float), 1.0f) as embedding")) == 2L)
+    assert(st.readVersioned("nul").count() == 5)
+    val conflict = intercept[IllegalArgumentException] {
+      st.appendVersioned("nul", spark.range(5, 6)
+        .selectExpr("id", "array(cast(id as double), 1.0d) as embedding"))
+    }
+    assert(conflict.getMessage.contains("conflict") &&
+      conflict.getMessage.contains("embedding: table array<float> vs batch array<double>"),
+      conflict.getMessage)
+    assert(st.versions("nul") == Seq(1L, 2L))
+  }
+
   test("versioned tables: reads of unknown names/versions refuse; delete removes the tree") {
     val st = freshStorage()
     intercept[IllegalArgumentException] { st.readVersioned("nope") }
