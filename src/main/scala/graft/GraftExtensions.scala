@@ -12,8 +12,9 @@ import graft.functions._
   * Column API.
   *
   * Two entry points:
-  *  - config-time: `SparkSession.builder().withExtensions(new
-  *    GraftExtensions)` (or `spark.sql.extensions=graft.GraftExtensions`)
+  *  - config-time: `withExtensions(new GraftExtensions)` on a session
+  *    builder, as [[GraftSession]] does (or
+  *    `spark.sql.extensions=graft.GraftExtensions`)
   *  - runtime: [[GraftExtensions.register]] on an existing session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

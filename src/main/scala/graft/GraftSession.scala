@@ -8,10 +8,14 @@ import org.apache.spark.sql.SparkSession
   *
   * On a real cluster, `shufflePartitions` should be ~2-3× total executor
   * cores (and AQE coalesces down); `local[n]` development wants n.
+  *
+  * Every entry point — `Bench`, `Verify`, `Probe`, `Explain`, the test
+  * base and perfbench — takes its session from [[getOrCreate]], so the
+  * configuration that is tested and benched is the one users get.
   */
 object GraftSession {
 
-  def builder(master: String = "local[*]",
+  private def builder(master: String = "local[*]",
       shufflePartitions: Int = 32): SparkSession.Builder =
     SparkSession.builder()
       .master(master)

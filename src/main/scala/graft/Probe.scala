@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Result-inspection main for scale probes: runs the named queries
   * against `SPARK_GRAFT_SF_DIR` and prints their rows — the tool behind
   * SCALING.md's recall-vs-scale tables (Bench times queries but never
@@ -13,15 +11,8 @@ import org.apache.spark.sql.SparkSession
 object Probe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-probe")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.getOrCreate(s"local[$cpus]", cpus)
     spark.sparkContext.setLogLevel("WARN")
     args.foreach { name =>
       println(s"== $name @ $sfDir ==")

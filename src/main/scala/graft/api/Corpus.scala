@@ -857,19 +857,16 @@ object Corpus {
     // OWN pointer pins an ann-pointer version: after a crashed parent
     // refresh the ann family's latest pointer can be an orphan the
     // parent never served — compact what the parent pins, not latest
-    val ptr = storage.readVersioned(s"${name}__ann", version).collect()
-    require(ptr.length == 1,
-      s"index pointer '${name}__ann' must hold exactly one row, " +
-        s"got ${ptr.length}")
-    val pinnedLists = ptr(0).getAs[Long]("lists_version")
+    val ptr = pointerRow(storage, s"${name}__ann", version)
+    val pinnedLists = ptr.getAs[Long]("lists_version")
     val snap = storage.readVersioned(s"${name}__lists", pinnedLists)
     // content-equal to the pinned version — recorded so CDC readers of
     // the artifact table keep their diffability across the re-pack
     val vl = storage.putVersioned(s"${name}__lists", snap,
       contentEqualTo = Some(pinnedLists))
-    annPtrCommit(storage, name, ptr(0).getAs[Long]("centroids_version"),
-      vl, ptr(0).getAs[Long]("corpus_version"),
-      ptrLong(ptr(0), "stale_rows", 0L))
+    annPtrCommit(storage, name, ptr.getAs[Long]("centroids_version"),
+      vl, ptr.getAs[Long]("corpus_version"),
+      ptrLong(ptr, "stale_rows", 0L))
   }
 
   /** [[compactAnnIndex]] for a persisted hybrid family: the dense
@@ -1029,17 +1026,14 @@ object Corpus {
     */
   def loadAnnIndex(storage: graft.sources.Storage, name: String,
       version: Long = -1L): AnnIndex = {
-    val ptr = storage.readVersioned(s"${name}__ann", version).collect()
-    require(ptr.length == 1,
-      s"index pointer '${name}__ann' must hold exactly one row, " +
-        s"got ${ptr.length}")
+    val ptr = pointerRow(storage, s"${name}__ann", version)
     val cent = storage
       .readVersioned(s"${name}__centroids",
-        ptr(0).getAs[Long]("centroids_version"))
+        ptr.getAs[Long]("centroids_version"))
       .localCheckpoint()
     val lists = storage
       .readVersioned(s"${name}__lists",
-        ptr(0).getAs[Long]("lists_version"))
+        ptr.getAs[Long]("lists_version"))
       .localCheckpoint()
     AnnIndex(cent, lists)
   }
@@ -1088,16 +1082,13 @@ object Corpus {
     */
   def loadTokenizer(storage: graft.sources.Storage, name: String,
       version: Long = -1L): Tokenizer = {
-    val ptr = storage.readVersioned(s"${name}__tok", version).collect()
-    require(ptr.length == 1,
-      s"tokenizer pointer '${name}__tok' must hold exactly one row, " +
-        s"got ${ptr.length}")
+    val ptr = pointerRow(storage, s"${name}__tok", version)
     Tokenizer(
       storage.readVersioned(s"${name}__merges",
-          ptr(0).getAs[Long]("merges_version"))
+          ptr.getAs[Long]("merges_version"))
         .localCheckpoint(),
       storage.readVersioned(s"${name}__vocab",
-          ptr(0).getAs[Long]("vocab_version"))
+          ptr.getAs[Long]("vocab_version"))
         .localCheckpoint())
   }
 
@@ -1526,16 +1517,13 @@ object Corpus {
     */
   def loadHybridIndex(storage: graft.sources.Storage, name: String,
       version: Long = -1L): HybridIndex = {
-    val ptr = storage.readVersioned(s"${name}__hybrid", version).collect()
-    require(ptr.length == 1,
-      s"index pointer '${name}__hybrid' must hold exactly one row, " +
-        s"got ${ptr.length}")
+    val ptr = pointerRow(storage, s"${name}__hybrid", version)
     HybridIndex(
       storage.readVersioned(s"${name}__postings",
-          ptr(0).getAs[Long]("postings_version"))
+          ptr.getAs[Long]("postings_version"))
         .localCheckpoint(),
       loadAnnIndex(storage, s"${name}__dense",
-        ptr(0).getAs[Long]("dense_version")))
+        ptr.getAs[Long]("dense_version")))
   }
 
   /** CONTINUOUS ingestion with CONTINUOUS index maintenance — the
@@ -1790,17 +1778,14 @@ object Corpus {
     */
   def loadIvfPqIndex(storage: graft.sources.Storage, name: String,
       version: Long = -1L): IvfPqIndex = {
-    val ptr = storage.readVersioned(s"${name}__ivfpq", version).collect()
-    require(ptr.length == 1,
-      s"index pointer '${name}__ivfpq' must hold exactly one row, " +
-        s"got ${ptr.length}")
+    val ptr = pointerRow(storage, s"${name}__ivfpq", version)
     IvfPqIndex(
       loadAnnIndex(storage, s"${name}__coarse",
-        ptr(0).getAs[Long]("coarse_version")),
+        ptr.getAs[Long]("coarse_version")),
       storage.readVersioned(s"${name}__codebooks",
-        ptr(0).getAs[Long]("codebooks_version")).localCheckpoint(),
+        ptr.getAs[Long]("codebooks_version")).localCheckpoint(),
       storage.readVersioned(s"${name}__codes",
-        ptr(0).getAs[Long]("codes_version")).localCheckpoint())
+        ptr.getAs[Long]("codes_version")).localCheckpoint())
   }
 
   /** CDC-driven incremental maintenance of a persisted [[IvfPqIndex]]
@@ -1979,14 +1964,12 @@ object Corpus {
     */
   def loadPairMiningBase(storage: graft.sources.Storage, name: String,
       version: Long = -1L): PairMiningBase = {
-    val ptr = storage.readVersioned(s"${name}__pmb", version).collect()
-    require(ptr.length == 1,
-      s"pointer '${name}__pmb' must hold exactly one row, got ${ptr.length}")
+    val ptr = pointerRow(storage, s"${name}__pmb", version)
     PairMiningBase(
       loadAnnIndex(storage, s"${name}__index",
-        ptr(0).getAs[Long]("index_version")),
+        ptr.getAs[Long]("index_version")),
       storage.readVersioned(s"${name}__fps",
-        ptr(0).getAs[Long]("fps_version")).localCheckpoint())
+        ptr.getAs[Long]("fps_version")).localCheckpoint())
   }
 
   /** CDC-driven incremental maintenance of a persisted

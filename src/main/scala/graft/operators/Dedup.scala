@@ -584,7 +584,7 @@ object Dedup {
     *
     * This ordering is the 100 TB shape for crawl corpora, which are
     * mostly EXACT mirrors: a group of k identical docs costs the raw
-    * banded join k² bucket-pair rows per band (the CcProbe ladder
+    * banded join k² bucket-pair rows per band (SCALING.md's CC ladder
     * measured the k=80 rung's edge build at 262 s — ~95% of
     * end-to-end), while here it costs one hash-aggregate row plus k-1
     * star edges, and the quadratic machinery only ever sees distinct

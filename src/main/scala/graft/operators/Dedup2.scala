@@ -628,7 +628,7 @@ object Dedup2 {
     * re-expand the exact groups as star edges
     * ([[Dedup.nearDupEdgesExactFirst]]) — the edge-build order a
     * crawl-mirror corpus needs at 100 TB, where exact-duplicate cliques
-    * otherwise explode ~k² inside the banding (the CcProbe k=80 rung:
+    * otherwise explode ~k² inside the banding (the CC ladder's k=80 rung:
     * 262 s raw vs the distinct-doc cost with the pre-pass; SCALING.md).
     * Cross-engine losslessness proof: the DuckDB oracle is the RAW
     * LSH clustering ([[ddClusterLshSql]]) — hash-equality of the two

@@ -27,8 +27,8 @@ object SkewJoin {
     * `PartialReducerPartitionSpec` (one reducer partition read in
     * slices by several tasks). Plan-STRING matching on "skew=true" is
     * rendering-dependent across Spark versions; the node types are the
-    * contract. Shared by `SkewJoinSpec` and `graft.tools.SkewProbe` so
-    * the ladder numbers and the spec pin the same fact.
+    * contract. `SkewJoinSpec` pins the split with it; SCALING.md's
+    * hot-key ladder row used the same check.
     */
   def planWasSkewSplit(
       plan: org.apache.spark.sql.execution.SparkPlan): Boolean = {

@@ -644,8 +644,7 @@ object TextAnalysis {
   def bpeMergesDisjoint(docs: DataFrame, n: Int,
       maxPerRound: Int = BpeMaxMergesPerRound,
       qualityFrac: Double = BpeBatchQualityFrac): DataFrame =
-    bpeMergesInstrumented(docs, n, exact = false, maxPerRound,
-      qualityFrac)._1
+    bpeMergesBatched(docs, n, exact = false, maxPerRound, qualityFrac)
 
   /** Merges learned per Spark round in the batched trainers — bounds
     * driver memory (the candidate collect is a small multiple of this,
@@ -660,6 +659,28 @@ object TextAnalysis {
     * rationale.
     */
   val BpeBatchQualityFrac = 0.5
+
+  /** Count of BPE training runs on the current thread — the serve-
+    * posture witness [[graft.operators.Similarity.trainingPasses]] is
+    * for IVF training, here for the tokenizer: a loaded
+    * [[graft.api.Tokenizer]]'s apply must leave this unchanged
+    * (training either ran or it didn't; wall-clock comparisons flake).
+    */
+  private[graft] object bpeTrainingPasses extends ThreadLocal[java.lang.Long] {
+    override def initialValue(): java.lang.Long = 0L
+    def increment(): Unit = set(get() + 1L)
+  }
+
+  /** The corpus's distinct alphanumeric words as a `(w)` frame — the
+    * vocabulary artifact the BPE family trains over and applies to
+    * (frame-parametric form of [[cachedBpeVocab]]; what
+    * [[graft.api.Corpus.saveTokenizer]] persists beside the merges).
+    */
+  def bpeVocabOf(docs: DataFrame): DataFrame =
+    docs
+      .select(explode(tokens(col("text"))).as("w"))
+      .filter(col("w").rlike("^[A-Za-z0-9]+$"))
+      .select(col("w")).distinct()
 
   /** Shared batched trainer. One Spark round = one pair count over the
     * DISTINCT vocabulary + ONE candidate collect (a small multiple of
@@ -694,38 +715,9 @@ object TextAnalysis {
     * to wrong answers. APPROX mode (`exact = false`) keeps scanning
     * past conflicts (see [[bpeMergesDisjoint]]).
     */
-  private def bpeMergesBatched(docs: DataFrame, n: Int, exact: Boolean,
-      maxPerRound: Int): DataFrame =
-    bpeMergesInstrumented(docs, n, exact, maxPerRound)._1
-
-  /** [[bpeMergesBatched]] plus the Spark-round count — the spec/ladder
-    * hook (SCALING.md's amortized-cost rows need merges ÷ rounds).
-    */
-  /** Count of BPE training runs on the current thread — the serve-
-    * posture witness [[graft.operators.Similarity.trainingPasses]] is
-    * for IVF training, here for the tokenizer: a loaded
-    * [[graft.api.Tokenizer]]'s apply must leave this unchanged
-    * (training either ran or it didn't; wall-clock comparisons flake).
-    */
-  private[graft] object bpeTrainingPasses extends ThreadLocal[java.lang.Long] {
-    override def initialValue(): java.lang.Long = 0L
-    def increment(): Unit = set(get() + 1L)
-  }
-
-  /** The corpus's distinct alphanumeric words as a `(w)` frame — the
-    * vocabulary artifact the BPE family trains over and applies to
-    * (frame-parametric form of [[cachedBpeVocab]]; what
-    * [[graft.api.Corpus.saveTokenizer]] persists beside the merges).
-    */
-  def bpeVocabOf(docs: DataFrame): DataFrame =
-    docs
-      .select(explode(tokens(col("text"))).as("w"))
-      .filter(col("w").rlike("^[A-Za-z0-9]+$"))
-      .select(col("w")).distinct()
-
-  private[graft] def bpeMergesInstrumented(docs: DataFrame, n: Int,
+  private def bpeMergesBatched(docs: DataFrame, n: Int,
       exact: Boolean, maxPerRound: Int,
-      qualityFrac: Double = BpeBatchQualityFrac): (DataFrame, Int) = {
+      qualityFrac: Double = BpeBatchQualityFrac): DataFrame = {
     bpeTrainingPasses.increment()
     val spark = docs.sparkSession
     var vocab = docs
@@ -740,9 +732,7 @@ object TextAnalysis {
     val learned =
       scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, String, Long)]
     var exhausted = false
-    var rounds = 0
     while (learned.size < n && !exhausted) {
-      rounds += 1
       val want = math.min(n - learned.size, maxPerRound)
       // exact mode stops at the first conflict, so a small window
       // suffices; approx mode SKIPS conflicts and keeps filling — on
@@ -812,8 +802,8 @@ object TextAnalysis {
       }
     }
     import spark.implicits._
-    (learned.toSeq.toDF("rank", "left", "right", "merged", "freq")
-      .orderBy(col("rank")), rounds)
+    learned.toSeq.toDF("rank", "left", "right", "merged", "freq")
+      .orderBy(col("rank"))
   }
 
   /** The shared training CTE chain (`words`, `v0`, and the unrolled

@@ -41,13 +41,17 @@ class GraftExtensionsSpec extends SparkTestBase {
   }
 
   test("GraftSession.getOrCreate yields a fully-registered session") {
-    val s = GraftSession.getOrCreate(master = "local[4]")
-    assert(s.sql("SELECT rolling_hash('x')").head().getLong(0) ==
+    // the shared session IS GraftSession.getOrCreate("local[4]", 4).
+    // Calling getOrCreate again here would hand back that same
+    // JVM-wide session and re-apply its default 32 shuffle partitions
+    // to every suite that runs after this one.
+    assert(spark.sql("SELECT rolling_hash('x')").head().getLong(0) ==
       RollingHash.reference("x"))
     val topk = graft.plans.TopK.perGroup(
-      graft.sources.Tables.orders(s, sf0001), Seq("o_custkey"),
+      graft.sources.Tables.orders(spark, sf0001), Seq("o_custkey"),
       org.apache.spark.sql.functions.col("o_totalprice"), 1)
     assert(topk.count() > 0)
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
   }
 
   test("wrong arity yields a clear error") {

@@ -181,8 +181,8 @@ class MultimodalSpec extends SparkTestBase {
     // (trained index + fixed corpus), so the floor is a regression pin,
     // not a statistical bound. The ABSOLUTE level is low by corpus
     // design (iid random vectors, √n cells, NumProbes=2 — the
-    // documented IVF recall law; `graft.tools.XModalRecall` records
-    // the ladder and the probes→recall knob in SCALING.md).
+    // documented IVF recall law; SCALING.md's retired-probes table
+    // keeps the measured ladder and the probes→recall knob).
     import org.apache.spark.sql.functions._
     val floor = Multimodal.XModalMinCos.toDouble
     def pairs(dir: String) = {
