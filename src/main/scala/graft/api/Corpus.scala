@@ -719,25 +719,8 @@ object Corpus {
       name: String, corpusVersion: Long): Long = {
     val vc = storage.putVersioned(s"${name}__centroids", index.centroids)
     val vl = storage.putVersioned(s"${name}__lists", index.lists)
-    annPtrCommit(storage, name, vc, vl, corpusVersion, 0L)
-  }
-
-  /** The ONE ann-pointer writer (save/refresh/compact and the nested
-    * ivfpq-coarse path all commit through it): pins the centroids and
-    * lists versions, the consumed corpus version, and `stale_rows` —
-    * the count of vectors assigned under the FROZEN centroids since
-    * the last full train (0 at save, accumulating per refresh) — the
-    * retrain-cadence observable [[describeIndexes]] surfaces, the
-    * quantizer twin of the hybrid family's `stale_docs`.
-    */
-  private def annPtrCommit(storage: graft.sources.Storage, name: String,
-      centV: Long, listsV: Long, corpusV: Long, staleRows: Long): Long = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    import spark.implicits._
-    storage.putVersioned(s"${name}__ann",
-      Seq((centV, listsV, corpusV, staleRows))
-        .toDF("centroids_version", "lists_version", "corpus_version",
-          "stale_rows"))
+    Pointers.Ann.commit(storage, name, "centroids_version" -> vc,
+      "lists_version" -> vl, "corpus_version" -> corpusVersion)
   }
 
   /** CDC-driven INCREMENTAL maintenance of a persisted ANN index — the
@@ -771,23 +754,17 @@ object Corpus {
   def refreshAnnIndex(storage: graft.sources.Storage, name: String,
       corpusTable: String, id: String = "vec_id",
       vec: String = "embedding"): Long = {
-    val ptrDf = storage.readVersioned(s"${name}__ann")
-    val spark0 = ptrDf.sparkSession
-    val ptr = ptrDf.collect()
-    require(ptr.length == 1,
-      s"index pointer '${name}__ann' must hold exactly one row, got ${ptr.length}")
-    require(ptr(0).schema.fieldNames.contains("corpus_version") &&
-      ptr(0).getAs[Long]("corpus_version") >= 0L,
+    val ptr = Pointers.Ann.row(storage, name)
+    require(ptr.schema.fieldNames.contains("corpus_version") &&
+      ptr.getAs[Long]("corpus_version") >= 0L,
       s"index '$name' was saved without a corpus version; re-save with " +
         "saveAnnIndex(index, storage, name, corpusVersion) to enable " +
         "incremental refresh")
-    val sinceV = ptr(0).getAs[Long]("corpus_version")
+    val sinceV = ptr.getAs[Long]("corpus_version")
     val vcs = storage.versions(corpusTable)
     require(vcs.nonEmpty, s"no versioned corpus table '$corpusTable'")
     val curV = vcs.last
-    if (curV == sinceV) return storage.versions(s"${name}__ann").last
-    val centV = ptr(0).getAs[Long]("centroids_version")
-    import spark0.implicits._
+    if (curV == sinceV) return Pointers.Ann.latest(storage, name)
     // the delta read is PINNED to curV — the version the pointer will
     // record as consumed. Resolving "latest" here and again inside the
     // read races a concurrent ingest append: its rows would land in
@@ -806,31 +783,43 @@ object Corpus {
     // per failed boundary in the continuous loop
     try {
       val nDelta = delta.count()
-      val stale = ptrLong(ptr(0), "stale_rows", 0L)
       if (nDelta == 0L)
         // the corpus advanced by maintenance only (compaction, rollback
         // forward, empty batches): nothing to index — re-pin the consumed
         // version so future refreshes diff from here instead of re-walking
         // the content-equal chain, and never commit a junk empty data dir
-        return annPtrCommit(storage, name, centV,
-          ptr(0).getAs[Long]("lists_version"), curV, stale)
-      val cent = storage.readVersioned(s"${name}__centroids", centV)
-        .localCheckpoint()
-      try {
-        val deltaLists = graft.operators.Similarity.kernelProbeCells(delta,
-          cent, 1, "c_id", "cv_c", "cn_c")
-        // append ONTO the pointer's pinned lists version, never "latest":
-        // a crashed earlier refresh (died between its lists append and its
-        // pointer commit) leaves an orphan lists version, and stacking this
-        // delta on top of it would serve every orphaned row TWICE. The
-        // base-pinned commit rebuilds from the last version actually served,
-        // so re-runs and double-fired refreshes are idempotent by
-        // construction (each produces a version with the delta exactly once)
-        val vl = storage.appendVersionedOnto(s"${name}__lists", deltaLists,
-          ptr(0).getAs[Long]("lists_version"))
-        annPtrCommit(storage, name, centV, vl, curV, stale + nDelta)
-      } finally graft.operators.Artifacts.freeLocalCheckpoint(cent)
+        return Pointers.Ann.recommit(storage, name, ptr, "corpus_version" -> curV)
+      annFold(storage, name, ptr, delta, nDelta, curV)
     } finally graft.operators.Artifacts.freeLocalCheckpoint(delta)
+  }
+
+  /** The ann family's delta fold, shared by the families that nest one:
+    * assign the `n` vectors of `delta` to their home cells under the
+    * FROZEN centroids ann pointer row `ptr` pins, append them to the
+    * lists, and re-pin ann family `name` with `corpusV` consumed and
+    * `stale_rows` grown by `n`. Returns the new ann pointer version.
+    */
+  private def annFold(storage: graft.sources.Storage, name: String,
+      ptr: org.apache.spark.sql.Row, delta: DataFrame, n: Long,
+      corpusV: Long): Long = {
+    val cent = Pointers.Ann.read(storage, name, ptr, "centroids")
+      .localCheckpoint()
+    try {
+      val deltaLists = graft.operators.Similarity.kernelProbeCells(delta,
+        cent, 1, "c_id", "cv_c", "cn_c")
+      // append ONTO the pointer's pinned lists version, never "latest":
+      // a crashed earlier refresh (died between its lists append and its
+      // pointer commit) leaves an orphan lists version, and stacking this
+      // delta on top of it would serve every orphaned row TWICE. The
+      // base-pinned commit rebuilds from the last version actually served,
+      // so re-runs and double-fired refreshes are idempotent by
+      // construction (each produces a version with the delta exactly once)
+      val vl = storage.appendVersionedOnto(s"${name}__lists", deltaLists,
+        ptr.getAs[Long]("lists_version"))
+      Pointers.Ann.recommit(storage, name, ptr, "lists_version" -> vl,
+        "corpus_version" -> corpusV,
+        "stale_rows" -> (Pointers.Ann.get(ptr, "stale_rows") + n))
+    } finally graft.operators.Artifacts.freeLocalCheckpoint(cent)
   }
 
   /** Compact a persisted ANN index family: every nightly
@@ -852,22 +841,12 @@ object Corpus {
     * version.
     */
   def compactAnnIndex(storage: graft.sources.Storage, name: String,
-      version: Long = -1L): Long = {
+      version: Long = -1L): Long =
     // `version` (default: latest) exists for composed families whose
     // OWN pointer pins an ann-pointer version: after a crashed parent
     // refresh the ann family's latest pointer can be an orphan the
     // parent never served — compact what the parent pins, not latest
-    val ptr = pointerRow(storage, s"${name}__ann", version)
-    val pinnedLists = ptr.getAs[Long]("lists_version")
-    val snap = storage.readVersioned(s"${name}__lists", pinnedLists)
-    // content-equal to the pinned version — recorded so CDC readers of
-    // the artifact table keep their diffability across the re-pack
-    val vl = storage.putVersioned(s"${name}__lists", snap,
-      contentEqualTo = Some(pinnedLists))
-    annPtrCommit(storage, name, ptr.getAs[Long]("centroids_version"),
-      vl, ptr.getAs[Long]("corpus_version"),
-      ptrLong(ptr, "stale_rows", 0L))
-  }
+    Pointers.Ann.compact(storage, name, version)
 
   /** [[compactAnnIndex]] for a persisted hybrid family: the dense
     * arm's lists compact, the postings table re-snapshots at its
@@ -877,19 +856,7 @@ object Corpus {
     * staleness carry over unchanged.
     */
   def compactHybridIndex(storage: graft.sources.Storage,
-      name: String): Long = {
-    val ptr = pointerRow(storage, s"${name}__hybrid")
-    val pinnedPost = ptr.getAs[Long]("postings_version")
-    val vp = storage.putVersioned(s"${name}__postings",
-      storage.readVersioned(s"${name}__postings", pinnedPost),
-      contentEqualTo = Some(pinnedPost))
-    val vd = compactAnnIndex(storage, s"${name}__dense",
-      ptr.getAs[Long]("dense_version"))
-    hybridPtrCommit(storage, name, vp, vd,
-      ptrLong(ptr, "lexdf_version"), ptrLong(ptr, "docs_version"),
-      ptrLong(ptr, "n_docs"), ptrLong(ptr, "sum_dl"),
-      ptrLong(ptr, "stale_docs", 0L))
-  }
+      name: String): Long = Pointers.Hybrid.compact(storage, name)
 
   /** [[compactAnnIndex]] for a persisted pair-mining family: the
     * fingerprints table and the nested index's lists both accrete one
@@ -898,25 +865,7 @@ object Corpus {
     * versions unchanged).
     */
   def compactPairMiningBase(storage: graft.sources.Storage,
-      name: String): Long = {
-    val ptrDf = storage.readVersioned(s"${name}__pmb")
-    val spark = ptrDf.sparkSession
-    val ptr = ptrDf.collect()
-    require(ptr.length == 1,
-      s"pointer '${name}__pmb' must hold exactly one row, got ${ptr.length}")
-    val pinnedFps = ptr(0).getAs[Long]("fps_version")
-    val vf = storage.putVersioned(s"${name}__fps",
-      storage.readVersioned(s"${name}__fps", pinnedFps),
-      contentEqualTo = Some(pinnedFps))
-    val vi = compactAnnIndex(storage, s"${name}__index",
-      ptr(0).getAs[Long]("index_version"))
-    import spark.implicits._
-    storage.putVersioned(s"${name}__pmb",
-      Seq((vf, vi, ptr(0).getAs[Long]("docs_version"),
-        ptr(0).getAs[Long]("vectors_version")))
-        .toDF("fps_version", "index_version",
-          "docs_version", "vectors_version"))
-  }
+      name: String): Long = Pointers.PairMining.compact(storage, name)
 
   /** Retention policy for a persisted ANN index family — the verb that
     * makes save/refresh sustainable: every [[saveAnnIndex]] /
@@ -935,22 +884,16 @@ object Corpus {
     * (manifests deleted, data directories deleted) across the family.
     */
   def vacuumAnnIndex(storage: graft.sources.Storage, name: String,
-      keepLastPointers: Int): (Int, Int) = sumCounts(Seq(
-    storage.vacuumVersions(s"${name}__ann", keepLastPointers),
-    vacuumPinnedArms(storage, s"${name}__ann",
-      Seq(s"${name}__centroids" -> "centroids_version",
-        s"${name}__lists" -> "lists_version"))))
+      keepLastPointers: Int): (Int, Int) =
+    Pointers.Ann.vacuum(storage, name, keepLastPointers)
 
   /** [[vacuumAnnIndex]] for a persisted tokenizer family (see
     * [[saveTokenizer]]): retain the last `keepLastPointers` tokenizer
     * pointers, vacuum merges/vocab keeping the pinned versions.
     */
   def vacuumTokenizer(storage: graft.sources.Storage, name: String,
-      keepLastPointers: Int): (Int, Int) = sumCounts(Seq(
-    storage.vacuumVersions(s"${name}__tok", keepLastPointers),
-    vacuumPinnedArms(storage, s"${name}__tok",
-      Seq(s"${name}__merges" -> "merges_version",
-        s"${name}__vocab" -> "vocab_version"))))
+      keepLastPointers: Int): (Int, Int) =
+    Pointers.Tok.vacuum(storage, name, keepLastPointers)
 
   /** [[vacuumAnnIndex]] for a persisted hybrid family (see
     * [[saveHybridIndex]]) — one level deeper: retained hybrid pointers
@@ -961,45 +904,8 @@ object Corpus {
     * pointers pin).
     */
   def vacuumHybridIndex(storage: graft.sources.Storage, name: String,
-      keepLastPointers: Int): (Int, Int) = sumCounts(Seq(
-    storage.vacuumVersions(s"${name}__hybrid", keepLastPointers),
-    vacuumPinnedArms(storage, s"${name}__hybrid",
-      Seq(s"${name}__postings" -> "postings_version",
-        s"${name}__dense__ann" -> "dense_version") ++
-        // the frozen-stats arm exists only once the family has frozen
-        // stats (full save or first exact refresh)
-        (if (storage.versions(s"${name}__lexdf").nonEmpty)
-          Seq(s"${name}__lexdf" -> "lexdf_version") else Seq.empty)),
-    vacuumPinnedArms(storage, s"${name}__dense__ann",
-      Seq(s"${name}__dense__centroids" -> "centroids_version",
-        s"${name}__dense__lists" -> "lists_version"))))
-
-  /** The ONE retention rule every persisted family shares: read each
-    * RETAINED version of `pointerTable` (the caller has already
-    * vacuumed it by its own policy — keep-last-K at the top, or
-    * keep-what-the-parent-pins for a nested pointer), collect the
-    * versions those pointers pin per arm, and vacuum each arm keeping
-    * exactly that set. Centralized so the rule cannot drift between
-    * families (columns are matched BY NAME — a schema reorder cannot
-    * silently re-target an arm).
-    */
-  private[api] def vacuumPinnedArms(storage: graft.sources.Storage,
-      pointerTable: String, arms: Seq[(String, String)]): (Int, Int) = {
-    // vacuum is DESTRUCTIVE: pointerRow's one-row guard refuses to
-    // derive a keep set from a malformed (multi-row) pointer version
-    val rows = storage.versions(pointerTable)
-      .map(v => pointerRow(storage, pointerTable, v))
-    sumCounts(arms.map { case (table, column) =>
-      // retained pointer versions predating a schema upgrade may lack
-      // the column, and -1 sentinels pin nothing — neither contributes
-      // to the keep set (keep-latest safety still applies underneath)
-      storage.vacuumVersionsKeeping(table,
-        rows.map(ptrLong(_, column)).filter(_ >= 0L).toSet)
-    })
-  }
-
-  private[api] def sumCounts(cs: Seq[(Int, Int)]): (Int, Int) =
-    (cs.map(_._1).sum, cs.map(_._2).sum)
+      keepLastPointers: Int): (Int, Int) =
+    Pointers.Hybrid.vacuum(storage, name, keepLastPointers)
 
   /** The one-row pointer read every load/refresh/vacuum/describe path
     * shares: resolve `table` at `version` (default: latest) and refuse
@@ -1026,16 +932,10 @@ object Corpus {
     */
   def loadAnnIndex(storage: graft.sources.Storage, name: String,
       version: Long = -1L): AnnIndex = {
-    val ptr = pointerRow(storage, s"${name}__ann", version)
-    val cent = storage
-      .readVersioned(s"${name}__centroids",
-        ptr.getAs[Long]("centroids_version"))
-      .localCheckpoint()
-    val lists = storage
-      .readVersioned(s"${name}__lists",
-        ptr.getAs[Long]("lists_version"))
-      .localCheckpoint()
-    AnnIndex(cent, lists)
+    val ptr = Pointers.Ann.row(storage, name, version)
+    AnnIndex(
+      Pointers.Ann.read(storage, name, ptr, "centroids").localCheckpoint(),
+      Pointers.Ann.read(storage, name, ptr, "lists").localCheckpoint())
   }
 
   /** Train a [[Tokenizer]] over a `(doc_id, text)` corpus: `n` BPE
@@ -1068,10 +968,8 @@ object Corpus {
       name: String): Long = {
     val vm = storage.putVersioned(s"${name}__merges", tok.merges)
     val vv = storage.putVersioned(s"${name}__vocab", tok.vocab)
-    val spark = tok.merges.sparkSession
-    import spark.implicits._
-    storage.putVersioned(s"${name}__tok",
-      Seq((vm, vv)).toDF("merges_version", "vocab_version"))
+    Pointers.Tok.commit(storage, name, "merges_version" -> vm,
+      "vocab_version" -> vv)
   }
 
   /** Rehydrate a persisted [[Tokenizer]] at `version` (default: latest
@@ -1082,14 +980,10 @@ object Corpus {
     */
   def loadTokenizer(storage: graft.sources.Storage, name: String,
       version: Long = -1L): Tokenizer = {
-    val ptr = pointerRow(storage, s"${name}__tok", version)
+    val ptr = Pointers.Tok.row(storage, name, version)
     Tokenizer(
-      storage.readVersioned(s"${name}__merges",
-          ptr.getAs[Long]("merges_version"))
-        .localCheckpoint(),
-      storage.readVersioned(s"${name}__vocab",
-          ptr.getAs[Long]("vocab_version"))
-        .localCheckpoint())
+      Pointers.Tok.read(storage, name, ptr, "merges").localCheckpoint(),
+      Pointers.Tok.read(storage, name, ptr, "vocab").localCheckpoint())
   }
 
   // ------------------------------------------------- TextRank model
@@ -1143,16 +1037,8 @@ object Corpus {
       name: String, docsCorpusVersion: Long = -1L): Long = {
     val vp = storage.putVersioned(s"${name}__pairs", model.pairs)
     val vr = storage.putVersioned(s"${name}__ranks", model.ranks)
-    rankPtrCommit(storage, name, vp, vr, docsCorpusVersion)
-  }
-
-  private def rankPtrCommit(storage: graft.sources.Storage, name: String,
-      pairsV: Long, ranksV: Long, docsV: Long): Long = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    import spark.implicits._
-    storage.putVersioned(s"${name}__tr",
-      Seq((pairsV, ranksV, docsV))
-        .toDF("pairs_version", "ranks_version", "docs_version"))
+    Pointers.TextRank.commit(storage, name, "pairs_version" -> vp,
+      "ranks_version" -> vr, "docs_version" -> docsCorpusVersion)
   }
 
   /** Rehydrate a persisted [[RankModel]] at `version` (default: latest
@@ -1165,12 +1051,10 @@ object Corpus {
     */
   def loadRankModel(storage: graft.sources.Storage, name: String,
       version: Long = -1L): RankModel = {
-    val ptr = pointerRow(storage, s"${name}__tr", version)
+    val ptr = Pointers.TextRank.row(storage, name, version)
     RankModel(
-      storage.readVersioned(s"${name}__pairs",
-        ptr.getAs[Long]("pairs_version")).localCheckpoint(),
-      storage.readVersioned(s"${name}__ranks",
-        ptr.getAs[Long]("ranks_version")).localCheckpoint())
+      Pointers.TextRank.read(storage, name, ptr, "pairs").localCheckpoint(),
+      Pointers.TextRank.read(storage, name, ptr, "ranks").localCheckpoint())
   }
 
   /** CDC refresh of a persisted [[RankModel]] — O(delta + vocabulary),
@@ -1188,7 +1072,7 @@ object Corpus {
   def refreshRankModel(storage: graft.sources.Storage, name: String,
       docsTable: String): Long = {
     val GR = graft.operators.GraphRank
-    val ptr = pointerRow(storage, s"${name}__tr")
+    val ptr = Pointers.TextRank.row(storage, name)
     val sinceV = ptr.getAs[Long]("docs_version")
     require(sinceV >= 0L,
       s"rank model '$name' was saved without a docs corpus version; " +
@@ -1198,7 +1082,7 @@ object Corpus {
     require(dvs.nonEmpty, s"no versioned docs table '$docsTable'")
     // pin the head ONCE (the refreshAnnIndex race comment applies)
     val curV = dvs.last
-    if (curV == sinceV) return storage.versions(s"${name}__tr").last
+    if (curV == sinceV) return Pointers.TextRank.latest(storage, name)
     val delta = storage.readVersionedSince(docsTable, sinceV,
         toVersion = curV)
       .select(col("doc_id"), col("text"))
@@ -1206,11 +1090,9 @@ object Corpus {
     try {
       if (delta.isEmpty)
         // maintenance-only advance: re-pin so future diffs start here
-        return rankPtrCommit(storage, name,
-          ptr.getAs[Long]("pairs_version"),
-          ptr.getAs[Long]("ranks_version"), curV)
-      val base = storage.readVersioned(s"${name}__pairs",
-        ptr.getAs[Long]("pairs_version"))
+        return Pointers.TextRank.recommit(storage, name, ptr,
+          "docs_version" -> curV)
+      val base = Pointers.TextRank.read(storage, name, ptr, "pairs")
       val folded = base.unionAll(GR.pairCounts(delta))
         .groupBy(col("w1"), col("w2")).agg(sum(col("n")).as("n"))
         .localCheckpoint()
@@ -1225,7 +1107,8 @@ object Corpus {
       try {
         val vp = storage.putVersioned(s"${name}__pairs", model.pairs)
         val vr = storage.putVersioned(s"${name}__ranks", model.ranks)
-        rankPtrCommit(storage, name, vp, vr, curV)
+        Pointers.TextRank.commit(storage, name, "pairs_version" -> vp,
+          "ranks_version" -> vr, "docs_version" -> curV)
       } finally model.close()
     } finally graft.operators.Artifacts.freeLocalCheckpoint(delta)
   }
@@ -1235,11 +1118,8 @@ object Corpus {
     * pinned versions.
     */
   def vacuumRankModel(storage: graft.sources.Storage, name: String,
-      keepLastPointers: Int): (Int, Int) = sumCounts(Seq(
-    storage.vacuumVersions(s"${name}__tr", keepLastPointers),
-    vacuumPinnedArms(storage, s"${name}__tr",
-      Seq(s"${name}__pairs" -> "pairs_version",
-        s"${name}__ranks" -> "ranks_version"))))
+      keepLastPointers: Int): (Int, Int) =
+    Pointers.TextRank.vacuum(storage, name, keepLastPointers)
 
   /** Cross-modal pair mining over YOUR frames (the gated `mm_pair_mine`
     * pass): top-`k` `texts` neighbors for every `images` vector via a
@@ -1304,7 +1184,8 @@ object Corpus {
     val vp = storage.putVersioned(s"${name}__postings", index.postings)
     val va = saveAnnIndex(index.ann, storage, s"${name}__dense",
       vectorsCorpusVersion)
-    hybridPtrCommit(storage, name, vp, va, -1L, -1L, -1L, -1L, 0L)
+    Pointers.Hybrid.commit(storage, name, "postings_version" -> vp,
+      "dense_version" -> va)
   }
 
   /** The FULL [[saveHybridIndex]]: additionally freeze the lexical
@@ -1325,9 +1206,7 @@ object Corpus {
     val vp = storage.putVersioned(s"${name}__postings", index.postings)
     val va = saveAnnIndex(index.ann, storage, s"${name}__dense",
       vectorsCorpusVersion)
-    val (vdf, nDocs, sumDl) = freezeLexStats(storage, name, vp, docs)
-    hybridPtrCommit(storage, name, vp, va, vdf, docsCorpusVersion,
-      nDocs, sumDl, 0L)
+    frozenCommit(storage, name, vp, va, docs, docsCorpusVersion)
   }
 
   /** Freeze the lexical stats from a COMMITTED postings snapshot plus
@@ -1336,47 +1215,23 @@ object Corpus {
     * posting-row count (one row per (doc, term)), sum_dl sums the
     * per-doc `dl` the postings carry (a zero-token doc has no
     * postings and contributes 0, exactly as the formula's stats do),
-    * and n_docs is a metadata-cheap row count of `docs`. Returns
-    * (lexdf version, n_docs, sum_dl).
+    * and n_docs is a metadata-cheap row count of `docs`. Commits the
+    * hybrid pointer over them with `stale_docs = 0` and returns its
+    * version.
     */
-  private def freezeLexStats(storage: graft.sources.Storage,
-      name: String, postingsV: Long, docs: DataFrame)
-      : (Long, Long, Long) = {
+  private def frozenCommit(storage: graft.sources.Storage,
+      name: String, postingsV: Long, denseV: Long, docs: DataFrame,
+      docsV: Long): Long = {
     val committed = storage.readVersioned(s"${name}__postings", postingsV)
     val vdf = storage.putVersioned(s"${name}__lexdf",
       committed.groupBy(col("term")).agg(count(lit(1)).as("df")))
     val sumDl = committed.select(col("doc_id"), col("dl")).distinct()
       .agg(coalesce(sum(col("dl").cast("long")), lit(0L)))
       .collect()(0).getLong(0)
-    (vdf, docs.count(), sumDl)
+    Pointers.Hybrid.commit(storage, name, "postings_version" -> postingsV,
+      "dense_version" -> denseV, "lexdf_version" -> vdf,
+      "docs_version" -> docsV, "n_docs" -> docs.count(), "sum_dl" -> sumDl)
   }
-
-  /** The ONE hybrid-pointer writer (save/refresh/rebuild/compact all
-    * commit through it, so the schema cannot drift between verbs):
-    * pins the postings and dense-arm pointer versions, the frozen
-    * lexical stats (`lexdf_version`, `n_docs`, `sum_dl` — all -1
-    * when the family has never frozen stats), the consumed docs
-    * corpus version, and `stale_docs` — the count of docs appended
-    * under the frozen stats since the last exact recalc, the
-    * rebuild-cadence observable [[describeIndexes]] surfaces.
-    */
-  private def hybridPtrCommit(storage: graft.sources.Storage,
-      name: String, postingsV: Long, denseV: Long, lexdfV: Long,
-      docsV: Long, nDocs: Long, sumDl: Long, staleDocs: Long): Long = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    import spark.implicits._
-    storage.putVersioned(s"${name}__hybrid",
-      Seq((postingsV, denseV, lexdfV, docsV, nDocs, sumDl, staleDocs))
-        .toDF("postings_version", "dense_version", "lexdf_version",
-          "docs_version", "n_docs", "sum_dl", "stale_docs"))
-  }
-
-  /** Read a pointer column that older pointer schemas may not carry
-    * (the hybrid pointer grew frozen-stats columns): absent → `dflt`.
-    */
-  private def ptrLong(r: org.apache.spark.sql.Row, c: String,
-      dflt: Long = -1L): Long =
-    if (r.schema.fieldNames.contains(c)) r.getAs[Long](c) else dflt
 
   /** Nightly maintenance pass over a persisted hybrid index — O(delta)
     * on BOTH arms:
@@ -1407,14 +1262,14 @@ object Corpus {
   def refreshHybridIndex(storage: graft.sources.Storage, name: String,
       docsTable: String, vectorsTable: String): Long = {
     val vd = refreshAnnIndex(storage, s"${name}__dense", vectorsTable)
-    val ptr = pointerRow(storage, s"${name}__hybrid")
-    val sinceV = ptrLong(ptr, "docs_version")
+    val H = Pointers.Hybrid
+    val ptr = H.row(storage, name)
+    val sinceV = H.get(ptr, "docs_version")
     val dvs = storage.versions(docsTable)
     require(dvs.nonEmpty, s"no versioned docs table '$docsTable'")
-    if (sinceV < 0L || ptrLong(ptr, "lexdf_version") < 0L ||
+    if (sinceV < 0L || H.get(ptr, "lexdf_version") < 0L ||
         !dvs.contains(sinceV) ||
-        !storage.readVersioned(s"${name}__postings",
-          ptr.getAs[Long]("postings_version")).columns.contains("dl"))
+        !H.read(storage, name, ptr, "postings").columns.contains("dl"))
       // exact path: no frozen stats to append under (legacy save), OR
       // the docs table's own retention reclaimed the pinned consumed
       // version (the docs side is fed by its OWN pipeline, whose
@@ -1438,11 +1293,8 @@ object Corpus {
       // refreshAnnIndex's no-op posture). Dense advanced → carry the
       // lexical arm forward and re-pin.
       if (vd == ptr.getAs[Long]("dense_version"))
-        return storage.versions(s"${name}__hybrid").last
-      return hybridPtrCommit(storage, name,
-        ptr.getAs[Long]("postings_version"), vd,
-        ptrLong(ptr, "lexdf_version"), sinceV, ptrLong(ptr, "n_docs"),
-        ptrLong(ptr, "sum_dl"), ptrLong(ptr, "stale_docs", 0L))
+        return H.latest(storage, name)
+      return H.recommit(storage, name, ptr, "dense_version" -> vd)
     }
     val delta = storage.readVersionedSince(docsTable, sinceV,
         toVersion = curV)
@@ -1456,22 +1308,19 @@ object Corpus {
         // maintenance-only advance (compaction, empty batches):
         // nothing to score — re-pin the consumed version so future
         // refreshes diff from here
-        return hybridPtrCommit(storage, name,
-          ptr.getAs[Long]("postings_version"), vd,
-          ptrLong(ptr, "lexdf_version"), curV, ptrLong(ptr, "n_docs"),
-          ptrLong(ptr, "sum_dl"), ptrLong(ptr, "stale_docs", 0L))
-      val dfRel = storage.readVersioned(s"${name}__lexdf",
-        ptrLong(ptr, "lexdf_version"))
+        return H.recommit(storage, name, ptr, "dense_version" -> vd,
+          "docs_version" -> curV)
+      val dfRel = H.read(storage, name, ptr, "lexstats")
       val deltaPost = graft.streaming.DocStreams.bm25PostingsFrozen(
-        delta, dfRel, ptrLong(ptr, "n_docs"), ptrLong(ptr, "sum_dl"))
+        delta, dfRel, H.get(ptr, "n_docs"), H.get(ptr, "sum_dl"))
       // append ONTO the pointer's pinned postings version, never
       // "latest" — a crashed earlier refresh's orphan postings version
       // must not be stacked on (see refreshAnnIndex's lists append)
       val vp = storage.appendVersionedOnto(s"${name}__postings",
         deltaPost, ptr.getAs[Long]("postings_version"))
-      hybridPtrCommit(storage, name, vp, vd,
-        ptrLong(ptr, "lexdf_version"), curV, ptrLong(ptr, "n_docs"),
-        ptrLong(ptr, "sum_dl"), ptrLong(ptr, "stale_docs", 0L) + nDelta)
+      H.recommit(storage, name, ptr, "postings_version" -> vp,
+        "dense_version" -> vd, "docs_version" -> curV,
+        "stale_docs" -> (H.get(ptr, "stale_docs") + nDelta))
     } finally graft.operators.Artifacts.freeLocalCheckpoint(delta)
   }
 
@@ -1488,9 +1337,8 @@ object Corpus {
     */
   def rebuildHybridPostings(storage: graft.sources.Storage, name: String,
       docsTable: String): Long = {
-    val ptr = pointerRow(storage, s"${name}__hybrid")
     exactPostingsCommit(storage, name, docsTable,
-      ptr.getAs[Long]("dense_version"))
+      Pointers.Hybrid.row(storage, name).getAs[Long]("dense_version"))
   }
 
   /** Shared exact-postings commit: rebuild postings + frozen stats
@@ -1507,8 +1355,7 @@ object Corpus {
       graft.streaming.DocStreams.bm25Postings(docs))
     // ONE tokenize pass total: df and sum_dl derive from the
     // committed postings, n_docs from a metadata-cheap count
-    val (vdf, nDocs, sumDl) = freezeLexStats(storage, name, vp, docs)
-    hybridPtrCommit(storage, name, vp, vd, vdf, curV, nDocs, sumDl, 0L)
+    frozenCommit(storage, name, vp, vd, docs, curV)
   }
 
   /** Rehydrate a persisted [[HybridIndex]] at `version` (default:
@@ -1517,11 +1364,9 @@ object Corpus {
     */
   def loadHybridIndex(storage: graft.sources.Storage, name: String,
       version: Long = -1L): HybridIndex = {
-    val ptr = pointerRow(storage, s"${name}__hybrid", version)
+    val ptr = Pointers.Hybrid.row(storage, name, version)
     HybridIndex(
-      storage.readVersioned(s"${name}__postings",
-          ptr.getAs[Long]("postings_version"))
-        .localCheckpoint(),
+      Pointers.Hybrid.read(storage, name, ptr, "postings").localCheckpoint(),
       loadAnnIndex(storage, s"${name}__dense",
         ptr.getAs[Long]("dense_version")))
   }
@@ -1572,8 +1417,8 @@ object Corpus {
       refreshEvery, trigger, compactEvery, vacuumKeep,
       refresh = () => { refreshAnnIndex(storage, indexName, corpusTable,
         id, vec); () },
-      consumedVersion = () => pinnedCorpusVersion(storage,
-        s"${indexName}__ann"))
+      consumedVersion = () =>
+        Pointers.Ann.consumed(storage, indexName, "corpus"))
 
   /** [[sinkWithAnnRefresh]] for a persisted [[IvfPqIndex]] — the
     * flagship 100 TB index's continuous loop as one verb: same
@@ -1593,8 +1438,8 @@ object Corpus {
       refreshEvery, trigger, compactEvery, vacuumKeep,
       refresh = () => { refreshIvfPqIndex(storage, indexName,
         corpusTable, id, vec); () },
-      consumedVersion = () => pinnedCorpusVersion(storage,
-        s"${indexName}__ivfpq"))
+      consumedVersion = () =>
+        Pointers.IvfPq.consumed(storage, indexName, "corpus"))
 
   /** [[sinkWithAnnRefresh]] for a persisted [[HybridIndex]] — the
     * retrieval shape a production RAG corpus serves, as one continuous
@@ -1636,7 +1481,8 @@ object Corpus {
       refreshEvery, trigger, compactEvery, vacuumKeep,
       refresh = () => { refreshHybridIndex(storage, indexName,
         docsTable, vectorsTable); () },
-      consumedVersion = () => hybridConsumedVersion(storage, indexName))
+      consumedVersion = () =>
+        Pointers.Hybrid.consumed(storage, indexName, "corpus"))
 
   /** [[sinkWithAnnRefresh]] for a persisted [[RankModel]] — the
     * TextRank family's continuous loop as one verb: the DOCS stream
@@ -1664,25 +1510,8 @@ object Corpus {
     sinkRefreshLoop(ds, storage, docsTable, checkpointDir,
       refreshEvery, trigger, compactEvery, vacuumKeep,
       refresh = () => { refreshRankModel(storage, modelName, docsTable); () },
-      consumedVersion = () => pointerRow(storage, s"${modelName}__tr")
-        .getAs[Long]("docs_version"))
-
-  /** The vectors-corpus version a persisted hybrid family has consumed:
-    * the hybrid pointer pins a dense-arm POINTER version, and THAT
-    * pointer (at its pinned version, never "latest" — a crashed refresh
-    * can strand a newer orphan) records the consumed corpus version.
-    */
-  private def hybridConsumedVersion(storage: graft.sources.Storage,
-      name: String): Long =
-    pointerRow(storage, s"${name}__dense__ann",
-      pointerRow(storage, s"${name}__hybrid").getAs[Long]("dense_version"))
-      .getAs[Long]("corpus_version")
-
-  private def pinnedCorpusVersion(storage: graft.sources.Storage,
-      pointerTable: String): Long =
-    // this version feeds the refresh-aware VACUUM's keep set —
-    // pointerRow's one-row guard runs before anything acts on it
-    pointerRow(storage, pointerTable).getAs[Long]("corpus_version")
+      consumedVersion = () =>
+        Pointers.TextRank.consumed(storage, modelName, "docs"))
 
   /** The ONE continuous-loop shape both index families share: a
     * synchronous catch-up refresh before the stream starts, the
@@ -1753,23 +1582,9 @@ object Corpus {
     val vc = saveAnnIndex(index.ann, storage, s"${name}__coarse")
     val vb = storage.putVersioned(s"${name}__codebooks", index.codebooks)
     val vk = storage.putVersioned(s"${name}__codes", index.codes)
-    ivfpqPtrCommit(storage, name, vc, vb, vk, corpusVersion, 0L)
-  }
-
-  /** The ONE ivfpq-pointer writer (see [[annPtrCommit]]):
-    * `stale_rows` counts vectors assigned + encoded under BOTH frozen
-    * quantizers (coarse centroids, PQ codebooks) since the last full
-    * train — the retrain-cadence observable.
-    */
-  private def ivfpqPtrCommit(storage: graft.sources.Storage,
-      name: String, coarseV: Long, cbV: Long, codesV: Long,
-      corpusV: Long, staleRows: Long): Long = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    import spark.implicits._
-    storage.putVersioned(s"${name}__ivfpq",
-      Seq((coarseV, cbV, codesV, corpusV, staleRows))
-        .toDF("coarse_version", "codebooks_version", "codes_version",
-          "corpus_version", "stale_rows"))
+    Pointers.IvfPq.commit(storage, name, "coarse_version" -> vc,
+      "codebooks_version" -> vb, "codes_version" -> vk,
+      "corpus_version" -> corpusVersion)
   }
 
   /** Rehydrate a persisted [[IvfPqIndex]] at `version` (default:
@@ -1778,14 +1593,12 @@ object Corpus {
     */
   def loadIvfPqIndex(storage: graft.sources.Storage, name: String,
       version: Long = -1L): IvfPqIndex = {
-    val ptr = pointerRow(storage, s"${name}__ivfpq", version)
+    val ptr = Pointers.IvfPq.row(storage, name, version)
     IvfPqIndex(
       loadAnnIndex(storage, s"${name}__coarse",
         ptr.getAs[Long]("coarse_version")),
-      storage.readVersioned(s"${name}__codebooks",
-        ptr.getAs[Long]("codebooks_version")).localCheckpoint(),
-      storage.readVersioned(s"${name}__codes",
-        ptr.getAs[Long]("codes_version")).localCheckpoint())
+      Pointers.IvfPq.read(storage, name, ptr, "codebooks").localCheckpoint(),
+      Pointers.IvfPq.read(storage, name, ptr, "codes").localCheckpoint())
   }
 
   /** CDC-driven incremental maintenance of a persisted [[IvfPqIndex]]
@@ -1802,14 +1615,8 @@ object Corpus {
   def refreshIvfPqIndex(storage: graft.sources.Storage, name: String,
       corpusTable: String, id: String = "vec_id",
       vec: String = "embedding"): Long = {
-    val ptrDf = storage.readVersioned(s"${name}__ivfpq")
-    val spark = ptrDf.sparkSession
-    import spark.implicits._
-    val ptr = ptrDf.collect()
-    require(ptr.length == 1,
-      s"index pointer '${name}__ivfpq' must hold exactly one row, " +
-        s"got ${ptr.length}")
-    val sinceV = ptr(0).getAs[Long]("corpus_version")
+    val ptr = Pointers.IvfPq.row(storage, name)
+    val sinceV = ptr.getAs[Long]("corpus_version")
     require(sinceV >= 0L,
       s"index '$name' was saved without a corpus version; re-save with " +
         "saveIvfPqIndex(index, storage, name, corpusVersion) to enable " +
@@ -1817,10 +1624,7 @@ object Corpus {
     val vcs = storage.versions(corpusTable)
     require(vcs.nonEmpty, s"no versioned corpus table '$corpusTable'")
     val curV = vcs.last
-    if (curV == sinceV) return storage.versions(s"${name}__ivfpq").last
-    val vCoarse = ptr(0).getAs[Long]("coarse_version")
-    val vb = ptr(0).getAs[Long]("codebooks_version")
-    val vk = ptr(0).getAs[Long]("codes_version")
+    if (curV == sinceV) return Pointers.IvfPq.latest(storage, name)
     val delta = storage.readVersionedSince(corpusTable, sinceV,
         toVersion = curV)
       .select(col(id).as("vec_id"), col(vec).as("embedding"))
@@ -1829,30 +1633,24 @@ object Corpus {
     // (see refreshAnnIndex)
     try {
       val nDelta = delta.count()
-      val stale = ptrLong(ptr(0), "stale_rows", 0L)
       if (nDelta == 0L)
-        return ivfpqPtrCommit(storage, name, vCoarse, vb, vk, curV, stale)
-      // coarse arm: frozen-centroid assignment onto the pinned lists
-      val coarsePtr = pointerRow(storage, s"${name}__coarse__ann", vCoarse)
-      val cent = storage.readVersioned(s"${name}__coarse__centroids",
-        coarsePtr.getAs[Long]("centroids_version")).localCheckpoint()
-      try {
-        val vl = storage.appendVersionedOnto(s"${name}__coarse__lists",
-          graft.operators.Similarity.kernelProbeCells(delta, cent, 1,
-            "c_id", "cv_c", "cn_c"),
-          coarsePtr.getAs[Long]("lists_version"))
-        // the nested coarse pointer mirrors the family's drift count —
-        // its corpus checkpoint stays -1 (a direct refresh must refuse)
-        val vCoarseNew = annPtrCommit(storage, s"${name}__coarse",
-          coarsePtr.getAs[Long]("centroids_version"), vl, -1L,
-          ptrLong(coarsePtr, "stale_rows", 0L) + nDelta)
-        // pq arm: frozen-codebook kernel encode onto the pinned codes
-        val cb = storage.readVersioned(s"${name}__codebooks", vb)
-        val vkNew = storage.appendVersionedOnto(s"${name}__codes",
-          graft.operators.Similarity.kernelEncodePq(delta, cb), vk)
-        ivfpqPtrCommit(storage, name, vCoarseNew, vb, vkNew, curV,
-          stale + nDelta)
-      } finally graft.operators.Artifacts.freeLocalCheckpoint(cent)
+        return Pointers.IvfPq.recommit(storage, name, ptr,
+          "corpus_version" -> curV)
+      // coarse arm: frozen-centroid assignment onto the pinned lists. The
+      // nested coarse pointer mirrors the family's drift count — its
+      // corpus checkpoint stays -1 (a direct refresh must refuse)
+      val vCoarseNew = annFold(storage, s"${name}__coarse",
+        Pointers.Ann.row(storage, s"${name}__coarse",
+          ptr.getAs[Long]("coarse_version")), delta, nDelta, -1L)
+      // pq arm: frozen-codebook kernel encode onto the pinned codes
+      val vkNew = storage.appendVersionedOnto(s"${name}__codes",
+        graft.operators.Similarity.kernelEncodePq(delta,
+          Pointers.IvfPq.read(storage, name, ptr, "codebooks")),
+        ptr.getAs[Long]("codes_version"))
+      Pointers.IvfPq.recommit(storage, name, ptr,
+        "coarse_version" -> vCoarseNew, "codes_version" -> vkNew,
+        "corpus_version" -> curV,
+        "stale_rows" -> (Pointers.IvfPq.get(ptr, "stale_rows") + nDelta))
     } finally graft.operators.Artifacts.freeLocalCheckpoint(delta)
   }
 
@@ -1862,25 +1660,7 @@ object Corpus {
     * equal, `#base=` recorded) and re-pin.
     */
   def compactIvfPqIndex(storage: graft.sources.Storage,
-      name: String): Long = {
-    val ptrDf = storage.readVersioned(s"${name}__ivfpq")
-    val spark = ptrDf.sparkSession
-    import spark.implicits._
-    val ptr = ptrDf.collect()
-    require(ptr.length == 1,
-      s"index pointer '${name}__ivfpq' must hold exactly one row, " +
-        s"got ${ptr.length}")
-    val vCoarseNew = compactAnnIndex(storage, s"${name}__coarse",
-      ptr(0).getAs[Long]("coarse_version"))
-    val pinnedCodes = ptr(0).getAs[Long]("codes_version")
-    val vkNew = storage.putVersioned(s"${name}__codes",
-      storage.readVersioned(s"${name}__codes", pinnedCodes),
-      contentEqualTo = Some(pinnedCodes))
-    ivfpqPtrCommit(storage, name, vCoarseNew,
-      ptr(0).getAs[Long]("codebooks_version"), vkNew,
-      ptr(0).getAs[Long]("corpus_version"),
-      ptrLong(ptr(0), "stale_rows", 0L))
-  }
+      name: String): Long = Pointers.IvfPq.compact(storage, name)
 
   /** [[vacuumAnnIndex]] for a persisted IVF×PQ family: retained ivfpq
     * pointers pin the codebooks/codes versions and the nested coarse
@@ -1888,15 +1668,8 @@ object Corpus {
     * pinned set.
     */
   def vacuumIvfPqIndex(storage: graft.sources.Storage, name: String,
-      keepLastPointers: Int): (Int, Int) = sumCounts(Seq(
-    storage.vacuumVersions(s"${name}__ivfpq", keepLastPointers),
-    vacuumPinnedArms(storage, s"${name}__ivfpq",
-      Seq(s"${name}__codebooks" -> "codebooks_version",
-        s"${name}__codes" -> "codes_version",
-        s"${name}__coarse__ann" -> "coarse_version")),
-    vacuumPinnedArms(storage, s"${name}__coarse__ann",
-      Seq(s"${name}__coarse__centroids" -> "centroids_version",
-        s"${name}__coarse__lists" -> "lists_version"))))
+      keepLastPointers: Int): (Int, Int) =
+    Pointers.IvfPq.vacuum(storage, name, keepLastPointers)
 
   /** Build the persisted base of an incremental pair-mining pipeline
     * over a `(doc_id, text)` docs frame and id-linked `(vec_id,
@@ -1949,12 +1722,9 @@ object Corpus {
       docsVersion: Long = -1L, vectorsVersion: Long = -1L): Long = {
     val vi = saveAnnIndex(base.index, storage, s"${name}__index")
     val vf = storage.putVersioned(s"${name}__fps", base.fingerprints)
-    val spark = base.fingerprints.sparkSession
-    import spark.implicits._
-    storage.putVersioned(s"${name}__pmb",
-      Seq((vf, vi, docsVersion, vectorsVersion))
-        .toDF("fps_version", "index_version",
-          "docs_version", "vectors_version"))
+    Pointers.PairMining.commit(storage, name, "fps_version" -> vf,
+      "index_version" -> vi, "docs_version" -> docsVersion,
+      "vectors_version" -> vectorsVersion)
   }
 
   /** Rehydrate a persisted [[PairMiningBase]] at `version` (default:
@@ -1964,12 +1734,11 @@ object Corpus {
     */
   def loadPairMiningBase(storage: graft.sources.Storage, name: String,
       version: Long = -1L): PairMiningBase = {
-    val ptr = pointerRow(storage, s"${name}__pmb", version)
+    val ptr = Pointers.PairMining.row(storage, name, version)
     PairMiningBase(
       loadAnnIndex(storage, s"${name}__index",
         ptr.getAs[Long]("index_version")),
-      storage.readVersioned(s"${name}__fps",
-        ptr.getAs[Long]("fps_version")).localCheckpoint())
+      Pointers.PairMining.read(storage, name, ptr, "fps").localCheckpoint())
   }
 
   /** CDC-driven incremental maintenance of a persisted
@@ -1999,9 +1768,7 @@ object Corpus {
     */
   def refreshPairMiningBase(storage: graft.sources.Storage, name: String,
       docsTable: String, vectorsTable: String): Long = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    import spark.implicits._
-    val ptr0 = pointerRow(storage, s"${name}__pmb")
+    val ptr0 = Pointers.PairMining.row(storage, name)
     val dv = ptr0.getAs[Long]("docs_version")
     val vv = ptr0.getAs[Long]("vectors_version")
     require(dv >= 0L && vv >= 0L,
@@ -2015,10 +1782,9 @@ object Corpus {
     val dCur = storage.versions(docsTable).last
     val vCur = storage.versions(vectorsTable).last
     if (dCur == dv && vCur == vv)
-      return storage.versions(s"${name}__pmb").last
+      return Pointers.PairMining.latest(storage, name)
     val vf = ptr0.getAs[Long]("fps_version")
-    val vi = ptr0.getAs[Long]("index_version")
-    val baseFps = storage.readVersioned(s"${name}__fps", vf)
+    val baseFps = Pointers.PairMining.read(storage, name, ptr0, "fps")
     val deltaKept = graft.operators.Pipeline
       .qualityFp(storage.readVersionedSince(docsTable, dv,
         toVersion = dCur))
@@ -2033,42 +1799,29 @@ object Corpus {
         // maintenance-only advance or a delta with no new QA survivors:
         // nothing to fold — re-pin the consumed versions only, committing
         // no junk empty directories into either artifact lineage
-        return storage.putVersioned(s"${name}__pmb",
-          Seq((vf, vi, dCur, vCur))
-            .toDF("fps_version", "index_version",
-              "docs_version", "vectors_version"))
+        return Pointers.PairMining.recommit(storage, name, ptr0,
+          "docs_version" -> dCur, "vectors_version" -> vCur)
       val vfNew = storage.appendVersionedOnto(s"${name}__fps", deltaKept, vf)
-      // the index arm: the ann pointer pinned by the pmb pointer names
-      // the centroids/lists pair the delta assigns under
-      val annPtr = pointerRow(storage, s"${name}__index__ann", vi)
-      val cent = storage.readVersioned(s"${name}__index__centroids",
-        annPtr.getAs[Long]("centroids_version")).localCheckpoint()
+      // checkpointed ONCE: the drift count below and the assignment
+      // kernel would otherwise each re-run the since-read + join
+      val newVecs = storage.readVersionedSince(vectorsTable, vv,
+          toVersion = vCur)
+        .select(col("vec_id"), col("embedding"))
+        .join(deltaKept.select(col("vec_id")), "vec_id")
+        .localCheckpoint()
       try {
-        // checkpointed ONCE: the drift count below and the assignment
-        // kernel would otherwise each re-run the since-read + join
-        val newVecs = storage.readVersionedSince(vectorsTable, vv,
-            toVersion = vCur)
-          .select(col("vec_id"), col("embedding"))
-          .join(deltaKept.select(col("vec_id")), "vec_id")
-          .localCheckpoint()
-        try {
-          val nNew = newVecs.count()
-          val vlNew = storage.appendVersionedOnto(s"${name}__index__lists",
-            graft.operators.Similarity.kernelProbeCells(newVecs, cent, 1,
-              "c_id", "cv_c", "cn_c"),
-            annPtr.getAs[Long]("lists_version"))
-          // nested pointer through the ONE ann writer: corpus stays -1
-          // (a direct refresh must refuse), stale_rows mirrors the
-          // vectors assigned under the frozen base centroids
-          val viNew = annPtrCommit(storage, s"${name}__index",
-            annPtr.getAs[Long]("centroids_version"), vlNew, -1L,
-            ptrLong(annPtr, "stale_rows", 0L) + nNew)
-          storage.putVersioned(s"${name}__pmb",
-            Seq((vfNew, viNew, dCur, vCur))
-              .toDF("fps_version", "index_version",
-                "docs_version", "vectors_version"))
-        } finally graft.operators.Artifacts.freeLocalCheckpoint(newVecs)
-      } finally graft.operators.Artifacts.freeLocalCheckpoint(cent)
+        // the index arm: the ann pointer pinned by the pmb pointer names
+        // the centroids/lists pair the delta assigns under; its corpus
+        // stays -1 (a direct refresh must refuse), stale_rows mirrors
+        // the vectors assigned under the frozen base centroids
+        val viNew = annFold(storage, s"${name}__index",
+          Pointers.Ann.row(storage, s"${name}__index",
+            ptr0.getAs[Long]("index_version")),
+          newVecs, newVecs.count(), -1L)
+        Pointers.PairMining.commit(storage, name, "fps_version" -> vfNew,
+          "index_version" -> viNew, "docs_version" -> dCur,
+          "vectors_version" -> vCur)
+      } finally graft.operators.Artifacts.freeLocalCheckpoint(newVecs)
     } finally graft.operators.Artifacts.freeLocalCheckpoint(deltaKept)
   }
 
@@ -2078,14 +1831,8 @@ object Corpus {
     * `<name>__index` ann family keeping exactly the pinned versions.
     */
   def vacuumPairMiningBase(storage: graft.sources.Storage, name: String,
-      keepLastPointers: Int): (Int, Int) = sumCounts(Seq(
-    storage.vacuumVersions(s"${name}__pmb", keepLastPointers),
-    vacuumPinnedArms(storage, s"${name}__pmb",
-      Seq(s"${name}__fps" -> "fps_version",
-        s"${name}__index__ann" -> "index_version")),
-    vacuumPinnedArms(storage, s"${name}__index__ann",
-      Seq(s"${name}__index__centroids" -> "centroids_version",
-        s"${name}__index__lists" -> "lists_version"))))
+      keepLastPointers: Int): (Int, Int) =
+    Pointers.PairMining.vacuum(storage, name, keepLastPointers)
 
   /** [[sinkWithAnnRefresh]] for a persisted [[PairMiningBase]] — the
     * contrastive-pair pipeline's continuous loop as one verb, with the
@@ -2142,7 +1889,7 @@ object Corpus {
           storage.batchHorizon(vectorsTable)) return
       refreshPairMiningBase(storage, baseName, docsTable, vectorsTable)
       if (vacuumKeep > 0) {
-        val ptr = pointerRow(storage, s"${baseName}__pmb")
+        val ptr = Pointers.PairMining.row(storage, baseName)
         def vac(table: String, consumed: Long): Unit = {
           val vs = storage.versions(table)
           storage.vacuumVersionsKeeping(table,
@@ -2194,11 +1941,12 @@ object Corpus {
   /** The operator-facing staleness observable over EVERY persisted
     * index family in a warehouse — the one frame that answers "is my
     * nightly loop keeping up, and when do I compact?". Scans
-    * [[graft.sources.Storage.lsVersioned]] for the seven pointer
-    * suffixes (`__ann`, `__hybrid`, `__ivfpq`, `__pmb`, `__tok`,
-    * `__tr`, `__gl` —
-    * nested arms like `<x>__dense__ann` report under their parent, not
-    * as their own family) and emits one row per (family, component):
+    * [[graft.sources.Storage.lsVersioned]] for the pointer suffix of
+    * every layout in [[Pointers]] (`__ann`, `__hybrid`, `__ivfpq`,
+    * `__pmb`, `__tok`, `__tr`, `__gl` — nested arms like
+    * `<x>__dense__ann` report under their parent, not as their own
+    * family) and emits one row per (family, component), in the order
+    * the layout declares its pins:
     *
     *  - ARM rows (`role` = centroids/lists/postings/codes/…): the arm
     *    table, the version the LATEST pointer pins, the arm table's
@@ -2242,165 +1990,75 @@ object Corpus {
     val rows = scala.collection.mutable.ArrayBuffer.empty[(String, String,
       Long, String, Option[String], Option[Long], Option[Long],
       Option[Long], Option[Long], Option[Long])]
-    def arm(idx: String, fam: String, pv: Long, role: String,
-        table: String, pinned: Long,
-        stale: Option[Long] = None): Unit = {
-      val vs = storage.versions(table)
-      rows += ((idx, fam, pv, role, Some(table), Some(pinned),
-        vs.lastOption, Some(vs.count(_ > pinned).toLong),
-        Some(storage.versionDirCount(table, pinned).toLong), stale))
-    }
-    def corpus(idx: String, fam: String, pv: Long, role: String,
-        consumed: Long, key: String): Unit = {
-      val tbl = corpusTables.get(key)
-      val vs = tbl.map(storage.versions(_)).getOrElse(Seq.empty)
-      val c = Some(consumed).filter(_ >= 0L)
-      // a mapped corpus table that does not (yet/anymore) exist
-      // degrades to nulls — the dashboard poll must never crash on a
-      // typo or a pending bootstrap
-      rows += ((idx, fam, pv, role, tbl, c, vs.lastOption,
-        c.filter(_ => vs.nonEmpty).map(cv => vs.count(_ > cv).toLong),
-        tbl.filter(_ => vs.nonEmpty)
-          .map(t => storage.versionDirCount(t).toLong), None))
-    }
-    // legacy pointers predate the drift column — report null, not a
-    // false "fresh" zero
-    def staleOf(r: org.apache.spark.sql.Row): Option[Long] =
-      if (r.schema.fieldNames.contains("stale_rows"))
-        Some(r.getAs[Long]("stale_rows"))
-      else None
-    def annArms(idx: String, fam: String, pv: Long, prefix: String,
-        annBase: String, annPtrV: Long): org.apache.spark.sql.Row = {
-      val r = pointerRow(storage, s"${annBase}__ann", annPtrV)
-      arm(idx, fam, pv, s"${prefix}centroids", s"${annBase}__centroids",
-        r.getAs[Long]("centroids_version"))
-      // stale_rows on the lists row = vectors assigned under the
-      // frozen centroids since the last train (the retrain dial)
-      arm(idx, fam, pv, s"${prefix}lists", s"${annBase}__lists",
-        r.getAs[Long]("lists_version"), stale = staleOf(r))
-      r
-    }
-    def nestedUnder(base: String, suffix: String, parent: String): Boolean =
-      base.endsWith(suffix) &&
-        names.contains(base.stripSuffix(suffix) + parent)
-    // one family's torn/malformed pointer must not take down the whole
-    // poll: roll back its partial arm rows and emit ONE degraded row
-    def guarded(idx: String, fam: String, p: String)(body: => Unit): Unit =
-      try body catch {
+    // a pointer table some parent family pins (`<x>__dense__ann` under
+    // `<x>__hybrid`) reports under that parent only
+    def nested(p: String): Boolean = Pointers.All.exists(parent =>
+      parent.arms.exists(a => a.nested.exists { n =>
+        p.endsWith(a.suffix + n.pointer) &&
+          names.contains(p.stripSuffix(a.suffix + n.pointer) + parent.pointer)
+      }))
+    for (p <- names.toSeq.sorted;
+        l <- Pointers.All.find(l => p.endsWith(l.pointer)) if !nested(p)) {
+      val idx = p.stripSuffix(l.pointer)
+      // one family's torn/malformed pointer must not take down the whole
+      // poll: roll back its partial arm rows and emit ONE degraded row
+      try {
+        val pv = storage.versions(p).last
+        def arm(role: String, table: String, pinned: Long,
+            stale: Option[Long]): Unit = {
+          val vs = storage.versions(table)
+          rows += ((idx, l.family, pv, role, Some(table), Some(pinned),
+            vs.lastOption, Some(vs.count(_ > pinned).toLong),
+            Some(storage.versionDirCount(table, pinned).toLong), stale))
+        }
+        def corpus(role: String, consumed: Long, key: String): Unit = {
+          val tbl = corpusTables.get(key)
+          val vs = tbl.map(storage.versions(_)).getOrElse(Seq.empty)
+          val c = Some(consumed).filter(_ >= 0L)
+          // a mapped corpus table that does not (yet/anymore) exist
+          // degrades to nulls — the dashboard poll must never crash on a
+          // typo or a pending bootstrap
+          rows += ((idx, l.family, pv, role, tbl, c, vs.lastOption,
+            c.filter(_ => vs.nonEmpty).map(cv => vs.count(_ > cv).toLong),
+            tbl.filter(_ => vs.nonEmpty)
+              .map(t => storage.versionDirCount(t).toLong), None))
+        }
+        // the layout's pins in order; a nested family's arms follow its
+        // arm row under a `<role>.` prefix, its consumed corpus is not
+        // reported
+        def pins(l: PointerLayout, base: String, r: org.apache.spark.sql.Row,
+            prefix: String): Unit = {
+          val nestedRows = scala.collection.mutable.Map.empty[String,
+            org.apache.spark.sql.Row]
+          l.pins.foreach {
+            case a: Arm =>
+              val pinned = l.get(r, a.column)
+              if (!a.optional || pinned >= 0L) {
+                // legacy pointers predate the drift column — report
+                // null, not a false "fresh" zero
+                arm(prefix + a.role, a.table(base), pinned,
+                  a.drift.filter(r.schema.fieldNames.contains)
+                    .map(c => r.getAs[Long](c)))
+                a.nested.foreach { n =>
+                  val nr = pointerRow(storage, a.table(base), pinned)
+                  nestedRows(a.role) = nr
+                  pins(n, base + a.suffix, nr, s"$prefix${a.role}.")
+                }
+              }
+            case c: Consumed if prefix.isEmpty =>
+              val v = c.via.fold(l.get(r, c.column))(
+                a => nestedRows(a).getAs[Long](c.column))
+              if (!c.optional || v >= 0L) corpus(c.role, v, idx + c.key)
+            case _: Consumed =>
+          }
+        }
+        // pinned: never torn vs pv
+        pins(l, idx, pointerRow(storage, p, pv), "")
+      } catch {
         case scala.util.control.NonFatal(_) =>
-          val keep = rows.filterNot(r => r._1 == idx && r._2 == fam)
-          rows.clear(); rows ++= keep
-          rows += ((idx, fam,
-            storage.versions(p).lastOption.getOrElse(-1L),
+          rows.filterInPlace(r => r._1 != idx || r._2 != l.family)
+          rows += ((idx, l.family, storage.versions(p).lastOption.getOrElse(-1L),
             "malformed", Some(p), None, None, None, None, None))
-      }
-    for (p <- names.toSeq.sorted) {
-      if (p.endsWith("__ann")) {
-        val base = p.stripSuffix("__ann")
-        val nested = nestedUnder(base, "__dense", "__hybrid") ||
-          nestedUnder(base, "__coarse", "__ivfpq") ||
-          nestedUnder(base, "__index", "__pmb")
-        if (!nested) guarded(base, "ann", p) {
-          val pv = storage.versions(p).last
-          val r = annArms(base, "ann", pv, "", base, pv)
-          corpus(base, "ann", pv, "corpus",
-            r.getAs[Long]("corpus_version"), base)
-        }
-      } else if (p.endsWith("__hybrid")) {
-        val base = p.stripSuffix("__hybrid")
-        guarded(base, "hybrid", p) {
-          val pv = storage.versions(p).last
-          val r = pointerRow(storage, p, pv) // pinned: never torn vs pv
-          arm(base, "hybrid", pv, "postings", s"${base}__postings",
-            r.getAs[Long]("postings_version"))
-          val dv = r.getAs[Long]("dense_version")
-          arm(base, "hybrid", pv, "dense", s"${base}__dense__ann", dv)
-          val d = annArms(base, "hybrid", pv, "dense.", s"${base}__dense", dv)
-          corpus(base, "hybrid", pv, "corpus",
-            d.getAs[Long]("corpus_version"), base)
-          // frozen-stats lexical arm (absent until the family freezes
-          // stats): `stale_rows` = docs appended under the frozen
-          // idf/avgdl since the last exact recalc — the
-          // rebuildHybridPostings cadence observable
-          val vdf = ptrLong(r, "lexdf_version")
-          if (vdf >= 0L)
-            arm(base, "hybrid", pv, "lexstats", s"${base}__lexdf", vdf,
-              stale = Some(ptrLong(r, "stale_docs", 0L)))
-          val dcv = ptrLong(r, "docs_version")
-          if (dcv >= 0L)
-            corpus(base, "hybrid", pv, "docs", dcv, s"$base/docs")
-        }
-      } else if (p.endsWith("__ivfpq")) {
-        val base = p.stripSuffix("__ivfpq")
-        guarded(base, "ivfpq", p) {
-          val pv = storage.versions(p).last
-          val r = pointerRow(storage, p, pv) // pinned: never torn vs pv
-          arm(base, "ivfpq", pv, "codebooks", s"${base}__codebooks",
-            r.getAs[Long]("codebooks_version"))
-          // stale_rows = vectors encoded under the frozen codebooks
-          // (and coarse centroids) since the last train
-          arm(base, "ivfpq", pv, "codes", s"${base}__codes",
-            r.getAs[Long]("codes_version"), stale = staleOf(r))
-          val cv = r.getAs[Long]("coarse_version")
-          arm(base, "ivfpq", pv, "coarse", s"${base}__coarse__ann", cv)
-          annArms(base, "ivfpq", pv, "coarse.", s"${base}__coarse", cv)
-          corpus(base, "ivfpq", pv, "corpus",
-            r.getAs[Long]("corpus_version"), base)
-        }
-      } else if (p.endsWith("__pmb")) {
-        val base = p.stripSuffix("__pmb")
-        guarded(base, "pmb", p) {
-          val pv = storage.versions(p).last
-          val r = pointerRow(storage, p, pv) // pinned: never torn vs pv
-          arm(base, "pmb", pv, "fps", s"${base}__fps",
-            r.getAs[Long]("fps_version"))
-          val iv = r.getAs[Long]("index_version")
-          arm(base, "pmb", pv, "index", s"${base}__index__ann", iv)
-          annArms(base, "pmb", pv, "index.", s"${base}__index", iv)
-          corpus(base, "pmb", pv, "docs",
-            r.getAs[Long]("docs_version"), s"$base/docs")
-          corpus(base, "pmb", pv, "vectors",
-            r.getAs[Long]("vectors_version"), s"$base/vectors")
-        }
-      } else if (p.endsWith("__tok")) {
-        val base = p.stripSuffix("__tok")
-        guarded(base, "tok", p) {
-          val pv = storage.versions(p).last
-          val r = pointerRow(storage, p, pv) // pinned: never torn vs pv
-          arm(base, "tok", pv, "merges", s"${base}__merges",
-            r.getAs[Long]("merges_version"))
-          arm(base, "tok", pv, "vocab", s"${base}__vocab",
-            r.getAs[Long]("vocab_version"))
-        }
-      } else if (p.endsWith("__tr")) {
-        // the persisted TextRank model (pairs + ranks; the pairs fold
-        // is the CDC observable — map `base -> docs table` for lag)
-        val base = p.stripSuffix("__tr")
-        guarded(base, "textrank", p) {
-          val pv = storage.versions(p).last
-          val r = pointerRow(storage, p, pv) // pinned: never torn vs pv
-          arm(base, "textrank", pv, "pairs", s"${base}__pairs",
-            r.getAs[Long]("pairs_version"))
-          arm(base, "textrank", pv, "ranks", s"${base}__ranks",
-            r.getAs[Long]("ranks_version"))
-          corpus(base, "textrank", pv, "docs",
-            r.getAs[Long]("docs_version"), base)
-        }
-      } else if (p.endsWith("__gl")) {
-        // the persisted growth ledger (graft.api.Events) reports like
-        // any index family: map `base -> events table` in corpusTables
-        // for the consumed-vs-head lag column
-        val base = p.stripSuffix("__gl")
-        guarded(base, "ledger", p) {
-          val pv = storage.versions(p).last
-          val r = pointerRow(storage, p, pv) // pinned: never torn vs pv
-          arm(base, "ledger", pv, "activity", s"${base}__act",
-            r.getAs[Long]("act_version"))
-          arm(base, "ledger", pv, "ledger", s"${base}__ledger",
-            r.getAs[Long]("ledger_version"))
-          corpus(base, "ledger", pv, "events",
-            r.getAs[Long]("events_version"), base)
-        }
       }
     }
     val spark = org.apache.spark.sql.SparkSession.active

@@ -294,16 +294,8 @@ object Events {
     val ledger = EventAnalytics.growthAccounting(act)
     val va = storage.putVersioned(s"${name}__act", bucketedAct(act))
     val vl = storage.putVersioned(s"${name}__ledger", ledger)
-    commitLedgerPointer(storage, name, va, vl, curV)(act.sparkSession)
-  }
-
-  private def commitLedgerPointer(storage: graft.sources.Storage,
-      name: String, actV: Long, ledgerV: Long, eventsV: Long)(
-      implicit spark: org.apache.spark.sql.SparkSession): Long = {
-    import spark.implicits._
-    storage.putVersioned(s"${name}__gl",
-      Seq((actV, ledgerV, eventsV))
-        .toDF("act_version", "ledger_version", "events_version"))
+    Pointers.Ledger.commit(storage, name, "act_version" -> va,
+      "ledger_version" -> vl, "events_version" -> curV)
   }
 
   /** The ledger at the pointer's pinned version (time-travel with
@@ -311,10 +303,8 @@ object Events {
     */
   def readGrowthLedger(storage: graft.sources.Storage, name: String,
       pointerVersion: Long = -1L): DataFrame = {
-    val ptr = Corpus.pointerRow(storage, s"${name}__gl", pointerVersion)
-    storage.readVersioned(s"${name}__ledger",
-        ptr.getAs[Long]("ledger_version"))
-      .orderBy("day")
+    val ptr = Pointers.Ledger.row(storage, name, pointerVersion)
+    Pointers.Ledger.read(storage, name, ptr, "ledger").orderBy("day")
   }
 
   /** CDC-driven incremental maintenance of a persisted growth ledger —
@@ -338,27 +328,26 @@ object Events {
   def refreshGrowthLedger(storage: graft.sources.Storage,
       eventsTable: String, name: String): Long = {
     import org.apache.spark.sql.functions.{coalesce, col, count, lit}
-    val ptr = Corpus.pointerRow(storage, s"${name}__gl")
+    val ptr = Pointers.Ledger.row(storage, name)
     val sinceV = ptr.getAs[Long]("events_version")
     val va = ptr.getAs[Long]("act_version")
     val vl = ptr.getAs[Long]("ledger_version")
     val vcs = storage.versions(eventsTable)
     require(vcs.nonEmpty, s"no versioned events table '$eventsTable'")
     val curV = vcs.last
-    if (curV == sinceV) return storage.versions(s"${name}__gl").last
+    if (curV == sinceV) return Pointers.Ledger.latest(storage, name)
     val free = graft.operators.Artifacts.freeLocalCheckpoint _
     // pinned to curV — the version the pointer records as consumed
     // (resolving "latest" twice races a concurrent ingest append)
     val deltaAct = activityOf(
       storage.readVersionedSince(eventsTable, sinceV, toVersion = curV))
       .localCheckpoint()
-    implicit val spark: org.apache.spark.sql.SparkSession =
-      deltaAct.sparkSession
     try {
       if (deltaAct.isEmpty)
         // maintenance-only advance (compaction, empty batches): re-pin
         // so future refreshes diff from here
-        return commitLedgerPointer(storage, name, va, vl, curV)
+        return Pointers.Ledger.recommit(storage, name, ptr,
+          "events_version" -> curV)
       val affected = deltaAct.select(col("user_id")).distinct()
       // bucket-pruned: only the files of touched buckets are read —
       // see [[affectedActivity]]; the prune is plan-audited in
@@ -371,7 +360,8 @@ object Events {
         if (newRows.isEmpty)
           // the delta only re-asserted known (user, day) activity: the
           // ledger cannot have changed — re-pin, write nothing
-          return commitLedgerPointer(storage, name, va, vl, curV)
+          return Pointers.Ledger.recommit(storage, name, ptr,
+            "events_version" -> curV)
         val newActAff = oldActAff.unionAll(deltaAct)
           .groupBy(col("user_id"), col("day")).agg(count(lit(1)).as("n"))
           .drop("n")
@@ -404,7 +394,8 @@ object Events {
           else newRows
         val va2 = storage.appendVersionedOnto(s"${name}__act",
           newActRows, va)
-        commitLedgerPointer(storage, name, va2, vl2, curV)
+        Pointers.Ledger.commit(storage, name, "act_version" -> va2,
+          "ledger_version" -> vl2, "events_version" -> curV)
       } finally free(oldActAff)
     } finally free(deltaAct)
   }
@@ -415,9 +406,6 @@ object Events {
     * every index family ([[Corpus.vacuumAnnIndex]]).
     */
   def vacuumGrowthLedger(storage: graft.sources.Storage, name: String,
-      keepLastPointers: Int): (Int, Int) = Corpus.sumCounts(Seq(
-    storage.vacuumVersions(s"${name}__gl", keepLastPointers),
-    Corpus.vacuumPinnedArms(storage, s"${name}__gl",
-      Seq(s"${name}__act" -> "act_version",
-        s"${name}__ledger" -> "ledger_version"))))
+      keepLastPointers: Int): (Int, Int) =
+    Pointers.Ledger.vacuum(storage, name, keepLastPointers)
 }

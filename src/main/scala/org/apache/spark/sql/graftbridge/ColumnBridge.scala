@@ -39,13 +39,18 @@ object ColumnBridge {
       exp.extraStrategies = exp.extraStrategies :+ strategy
   }
 
-  /** Runtime SQL-function registration (sessionState is `private[sql]`).
-    * Complements the config-time `SparkSessionExtensions` path for
-    * sessions that already exist.
+  /** Idempotent runtime SQL-function registration (sessionState is
+    * `private[sql]`). Complements the config-time
+    * `SparkSessionExtensions` path for sessions that already exist; a
+    * name the session already resolves (e.g. injected by those
+    * extensions) is left as it is.
     */
   def registerFunction(spark: org.apache.spark.sql.SparkSession, name: String,
-      builder: Seq[Expression] => Expression): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      builder: Seq[Expression] => Expression): Unit = {
+    val registry = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "built-in")
+    if (!registry.functionExists(
+        org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
+      registry.createOrReplaceTempFunction(name, builder, "built-in")
+  }
 }

@@ -45,6 +45,31 @@ class SessionContractSpec extends SparkTestBase {
     assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
   }
 
+  test("GraftSession.getOrCreate on a live session re-registers no function") {
+    // the session was built with the engine's extensions, so its
+    // functions already exist: a second registration replaces each one
+    // and logs a WARN per function
+    val logger = org.apache.logging.log4j.LogManager.getLogger(
+        classOf[org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry])
+      .asInstanceOf[org.apache.logging.log4j.core.Logger]
+    val replaced = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val capture = new org.apache.logging.log4j.core.appender.AbstractAppender(
+        "graft-replaced", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: org.apache.logging.log4j.core.LogEvent): Unit = {
+        val m = e.getMessage.getFormattedMessage
+        if (m.contains("replaced a previously registered function")) replaced.add(m)
+      }
+    }
+    capture.start()
+    logger.addAppender(capture)
+    try GraftSession.getOrCreate("local[4]", 4)
+    finally { logger.removeAppender(capture); capture.stop() }
+    assert(replaced.isEmpty, s"re-registered: ${replaced.asScala.mkString("; ")}")
+    assert(spark.sql("SELECT rolling_hash('x')").head().getLong(0) ==
+      RollingHash.reference("x"))
+  }
+
   test("only GraftSession.scala builds a SparkSession") {
     val call = """SparkSession\s*\.\s*builder""".r
     val comment = """(?s)/\*.*?\*/|//[^\n]*""".r

@@ -52,7 +52,9 @@ class IndexReadJobsSpec extends SparkTestBase {
     // a refresh appends onto the lists and the corpus: the header
     // rides every commit, so the refreshed index resolves as cheaply
     st.appendVersioned("vecs", delta)
-    Corpus.refreshAnnIndex(st, "idx", "vecs")
+    // the refresh is pinned too: a pointer read or write that costs
+    // one more Spark job fails here
+    assert(JobCount(spark)(Corpus.refreshAnnIndex(st, "idx", "vecs")) == 8)
     assert(JobCount(spark) { loaded = Corpus.loadAnnIndex(st, "idx") } == 3)
     servesDelta(loaded, delta)
     loaded.close()
