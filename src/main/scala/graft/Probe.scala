@@ -3,7 +3,7 @@ package graft
 /** Result-inspection main for scale probes: runs the named queries
   * against `SPARK_GRAFT_SF_DIR` and prints their rows — the tool behind
   * SCALING.md's recall-vs-scale tables (Bench times queries but never
-  * shows results; Verify dumps all 124 — this runs just the named ones).
+  * shows results; Verify dumps them all — this runs just the named ones).
   *
   *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
   *     sbt "runMain graft.Probe sim_pq sim_ivfpq"

@@ -5,11 +5,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.operators.{AsOfJoin, CorpusOps, Dedup, Dedup2, EventAnalytics, GraphRank, HeavyHitters, MapReduceQueries, Multimodal, Pii, Pipeline, Relational, Relational2, Relational3, Relational4, Relational5, Similarity, TextAnalysis}
 import graft.streaming.{DocStreams, EventStreams, VecStreams}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** One gated query: the name the driver keys it by, its build over
+  * `(session, sf dir)`, and the DuckDB SQL its result is hash-checked
+  * against. Each module declares its rows once, in its `gated` list.
+  */
+final case class Gated(
+    name: String,
+    build: (SparkSession, String) => DataFrame,
+    oracleSql: String)
+
+/** Driver contract — see SURVEY.md §7.
   *
-  * Aggregates the per-module query registries. Every `queries` key with a
-  * matching `oracleSql` key is hash-checked against DuckDB by the driver at
-  * sf0.01; keys without oracle SQL get a rows-only check.
+  * One table of every module's [[Gated]] rows. Every key carries oracle
+  * SQL, so the driver hash-checks every key against DuckDB at sf0.01.
   */
 object SparkEntry {
 
@@ -21,27 +29,30 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Pipeline.pipeE2e(spark, "/root/testdata/sf0.001")
 
+  /** The rows keyed by name; a name declared twice is rejected. */
+  private[graft] def table(rows: Seq[Gated]): Map[String, Gated] = {
+    val dups = rows.groupBy(_.name).collect { case (n, rs) if rs.size > 1 => n }
+    require(dups.isEmpty,
+      s"gated query declared more than once: ${dups.toSeq.sorted.mkString(", ")}")
+    rows.map(g => g.name -> g).toMap
+  }
+
+  private val gated: Map[String, Gated] = table(Seq(
+    Relational.gated, Relational2.gated, Relational3.gated,
+    Relational4.gated, Relational5.gated, MapReduceQueries.gated,
+    TextAnalysis.gated, Dedup.gated, Dedup2.gated, Similarity.gated,
+    EventStreams.gated, Multimodal.gated, AsOfJoin.gated, Pipeline.gated,
+    CorpusOps.gated, Pii.gated, HeavyHitters.gated, EventAnalytics.gated,
+    GraphRank.gated, VecStreams.gated, DocStreams.gated,
+  ).flatten)
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Relational.queries ++ Relational2.queries ++ Relational3.queries ++
-      Relational4.queries ++ Relational5.queries ++
-      MapReduceQueries.queries ++ TextAnalysis.queries ++
-      Dedup.queries ++ Dedup2.queries ++ Similarity.queries ++ EventStreams.queries ++
-      Multimodal.queries ++ AsOfJoin.queries ++ Pipeline.queries ++
-      CorpusOps.queries ++ Pii.queries ++ HeavyHitters.queries ++
-      EventAnalytics.queries ++ GraphRank.queries ++
-      VecStreams.queries ++ DocStreams.queries
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    gated.map { case (n, g) => n -> g.build }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops.
+    * the same parquet tables.
     */
-  def oracleSql: Map[String, String] =
-    Relational.oracles ++ Relational2.oracles ++ Relational3.oracles ++
-      Relational4.oracles ++ Relational5.oracles ++
-      MapReduceQueries.oracles ++ TextAnalysis.oracles ++
-      Dedup.oracles ++ Dedup2.oracles ++ Similarity.oracles ++ EventStreams.oracles ++
-      Multimodal.oracles ++ AsOfJoin.oracles ++ Pipeline.oracles ++
-      CorpusOps.oracles ++ Pii.oracles ++ HeavyHitters.oracles ++
-      EventAnalytics.oracles ++ GraphRank.oracles ++
-      VecStreams.oracles ++ DocStreams.oracles
+  val oracleSql: Map[String, String] =
+    gated.map { case (n, g) => n -> g.oracleSql }
 }

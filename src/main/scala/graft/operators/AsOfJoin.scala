@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Gated
 import graft.sources.Tables
 
 /** As-of (nearest-prior) join — an operator Spark SQL lacks natively.
@@ -146,12 +147,9 @@ object AsOfJoin {
       |FROM p ASOF JOIN v ON p.user_id = v.v_user AND p.ts_us <= v.view_us
       |ORDER BY event_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "st_asof_join"   -> stAsofJoin _,
-    "st_asof_custom" -> stAsofCustom _,
-    "st_asof_fwd"    -> stAsofFwd _)
-  val oracles: Map[String, String] = Map(
-    "st_asof_join"   -> stAsofJoinSql,
-    "st_asof_custom" -> stAsofJoinSql,
-    "st_asof_fwd"    -> stAsofFwdSql)
+  val gated: Seq[Gated] = Seq(
+    Gated("st_asof_join",   stAsofJoin,   stAsofJoinSql),
+    Gated("st_asof_custom", stAsofCustom, stAsofJoinSql),
+    Gated("st_asof_fwd",    stAsofFwd,    stAsofFwdSql),
+  )
 }

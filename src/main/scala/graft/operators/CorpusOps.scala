@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
 
+import graft.Gated
 import graft.functions._
 import graft.sources.Tables._
 
@@ -1059,35 +1060,19 @@ object CorpusOps {
        |ORDER BY decile, curriculum_key, q.doc_id""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "cp_curriculum"   -> cpCurriculum _,
-    "cp_datacard"     -> cpDatacard _,
-    "cp_waterfill"    -> cpWaterfill _,
-    "cp_domain_cap"   -> cpDomainCap _,
-    "cp_dup_sample"   -> cpDupSample _,
-    "cp_overlap"      -> cpOverlap _,
-    "cp_temperature"  -> cpTemperature _,
-    "cp_split"        -> cpSplit _,
-    "cp_stratified"   -> cpStratified _,
-    "cp_shuffle"      -> cpShuffle _,
-    "cp_mixture"      -> cpMixture _,
-    "cp_token_budget" -> cpTokenBudget _,
-    "cp_importance"   -> cpImportance _,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "cp_curriculum"   -> cpCurriculumSql,
-    "cp_datacard"     -> cpDatacardSql,
-    "cp_waterfill"    -> cpWaterfillSql,
-    "cp_domain_cap"   -> cpDomainCapSql,
-    "cp_dup_sample"   -> cpDupSampleSql,
-    "cp_overlap"      -> cpOverlapSql,
-    "cp_temperature"  -> cpTemperatureSql,
-    "cp_split"        -> cpSplitSql,
-    "cp_stratified"   -> cpStratifiedSql,
-    "cp_shuffle"      -> cpShuffleSql,
-    "cp_mixture"      -> cpMixtureSql,
-    "cp_token_budget" -> cpTokenBudgetSql,
-    "cp_importance"   -> cpImportanceSql,
+  val gated: Seq[Gated] = Seq(
+    Gated("cp_curriculum",   cpCurriculum,  cpCurriculumSql),
+    Gated("cp_datacard",     cpDatacard,    cpDatacardSql),
+    Gated("cp_waterfill",    cpWaterfill,   cpWaterfillSql),
+    Gated("cp_domain_cap",   cpDomainCap,   cpDomainCapSql),
+    Gated("cp_dup_sample",   cpDupSample,   cpDupSampleSql),
+    Gated("cp_overlap",      cpOverlap,     cpOverlapSql),
+    Gated("cp_temperature",  cpTemperature, cpTemperatureSql),
+    Gated("cp_split",        cpSplit,       cpSplitSql),
+    Gated("cp_stratified",   cpStratified,  cpStratifiedSql),
+    Gated("cp_shuffle",      cpShuffle,     cpShuffleSql),
+    Gated("cp_mixture",      cpMixture,     cpMixtureSql),
+    Gated("cp_token_budget", cpTokenBudget, cpTokenBudgetSql),
+    Gated("cp_importance",   cpImportance,  cpImportanceSql),
   )
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
+import graft.Gated
 import graft.functions._
 import graft.functions.SimHash.simhash
 import graft.sources.Tables._
@@ -1220,37 +1221,20 @@ object Dedup {
        |ORDER BY t.doc_id""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dd_incremental_lsh"   -> ddIncrementalLsh _,
-    "dd_exact"             -> ddExact _,
-    "dd_apply"             -> ddApply _,
-    "dd_apply_lsh"         -> ddApplyLsh _,
-    "dd_ngram_jaccard"     -> ddNgramJaccard _,
-    "dd_containment"       -> ddContainment _,
-    "dd_containment_clean" -> ddContainmentClean _,
-    "dd_minhash_lsh"       -> ddMinhashLsh _,
-    "dd_minhash_est"       -> ddMinhashEst _,
-    "dd_lsh_pr"            -> ddLshPr _,
-    "dd_simhash"           -> ddSimhash _,
-    "dd_embed_cosine"      -> ddEmbedCosine _,
-    "dd_incremental"       -> ddIncremental _,
-    "dd_incremental_bloom" -> ddIncrementalBloom _,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "dd_exact"             -> ddExactSql,
-    "dd_apply"             -> ddApplySql,
-    "dd_apply_lsh"         -> ddApplyLshSql,
-    "dd_ngram_jaccard"     -> ddNgramJaccardSql,
-    "dd_containment"       -> ddContainmentSql,
-    "dd_containment_clean" -> ddContainmentCleanSql,
-    "dd_minhash_lsh"       -> ddMinhashLshSql,
-    "dd_minhash_est"       -> ddMinhashEstSql,
-    "dd_lsh_pr"            -> ddLshPrSql,
-    "dd_simhash"           -> ddSimhashSql,
-    "dd_embed_cosine"      -> ddEmbedCosineSql,
-    "dd_incremental"       -> ddIncrementalSql,
-    "dd_incremental_bloom" -> ddIncrementalBloomSql,
-    "dd_incremental_lsh"   -> ddIncrementalLshSql,
+  val gated: Seq[Gated] = Seq(
+    Gated("dd_incremental_lsh",   ddIncrementalLsh,   ddIncrementalLshSql),
+    Gated("dd_exact",             ddExact,            ddExactSql),
+    Gated("dd_apply",             ddApply,            ddApplySql),
+    Gated("dd_apply_lsh",         ddApplyLsh,         ddApplyLshSql),
+    Gated("dd_ngram_jaccard",     ddNgramJaccard,     ddNgramJaccardSql),
+    Gated("dd_containment",       ddContainment,      ddContainmentSql),
+    Gated("dd_containment_clean", ddContainmentClean, ddContainmentCleanSql),
+    Gated("dd_minhash_lsh",       ddMinhashLsh,       ddMinhashLshSql),
+    Gated("dd_minhash_est",       ddMinhashEst,       ddMinhashEstSql),
+    Gated("dd_lsh_pr",            ddLshPr,            ddLshPrSql),
+    Gated("dd_simhash",           ddSimhash,          ddSimhashSql),
+    Gated("dd_embed_cosine",      ddEmbedCosine,      ddEmbedCosineSql),
+    Gated("dd_incremental",       ddIncremental,      ddIncrementalSql),
+    Gated("dd_incremental_bloom", ddIncrementalBloom, ddIncrementalBloomSql),
   )
 }

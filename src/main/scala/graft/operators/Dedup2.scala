@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
+import graft.Gated
 import graft.sources.Tables._
 
 /** Second dedup family: span-level duplicate detection (the
@@ -977,29 +978,17 @@ object Dedup2 {
        |  WHERE $semanticEdgeSql),
        |${componentsTailSql("vec_id")}""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dd_spans"         -> ddSpans _,
-    "dd_spans_apply"   -> ddSpansApply _,
-    "dd_cluster"       -> ddCluster _,
-    "dd_canonical"     -> ddCanonical _,
-    "dd_canonical_lsh" -> ddCanonicalLsh _,
-    "dd_cluster_lsh"   -> ddClusterLsh _,
-    "dd_cluster_xf"    -> ddClusterXf _,
-    "dd_semantic"      -> ddSemantic _,
-    "dd_semantic_lsh"  -> ddSemanticLsh _,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "dd_spans"         -> ddSpansSql,
-    "dd_spans_apply"   -> ddSpansApplySql,
-    "dd_cluster"       -> ddClusterSql,
-    "dd_canonical"     -> ddCanonicalSql,
-    "dd_canonical_lsh" -> ddCanonicalLshSql,
-    "dd_cluster_lsh"   -> ddClusterLshSql,
+  val gated: Seq[Gated] = Seq(
+    Gated("dd_spans",         ddSpans,        ddSpansSql),
+    Gated("dd_spans_apply",   ddSpansApply,   ddSpansApplySql),
+    Gated("dd_cluster",       ddCluster,      ddClusterSql),
+    Gated("dd_canonical",     ddCanonical,    ddCanonicalSql),
+    Gated("dd_canonical_lsh", ddCanonicalLsh, ddCanonicalLshSql),
+    Gated("dd_cluster_lsh",   ddClusterLsh,   ddClusterLshSql),
     // deliberately the RAW-path SQL: equality certifies the exact-first
     // collapse is lossless (see ddClusterXf)
-    "dd_cluster_xf"    -> ddClusterLshSql,
-    "dd_semantic"      -> ddSemanticSql,
-    "dd_semantic_lsh"  -> ddSemanticLshSql,
+    Gated("dd_cluster_xf",    ddClusterXf,    ddClusterLshSql),
+    Gated("dd_semantic",      ddSemantic,     ddSemanticSql),
+    Gated("dd_semantic_lsh",  ddSemanticLsh,  ddSemanticLshSql),
   )
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Gated
 import graft.sources.Tables.events
 
 /** Behavioral event analytics: ordered funnels and cohort retention.
@@ -883,29 +884,16 @@ object EventAnalytics {
        |WHERE dau > 0
        |ORDER BY day""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ev_path"        -> evPath _,
-    "ev_funnel"      -> evFunnel _,
-    "ev_retention"   -> evRetention _,
-    "ev_anomaly"     -> evAnomaly _,
-    "ev_attribution" -> evAttribution _,
-    "ev_markov"      -> evMarkov _,
-    "ev_scd2"        -> evScd2 _,
-    "ev_lifecycle"   -> evLifecycle _,
-    "ev_stickiness"  -> evStickiness _,
-    "ev_stickiness_hll" -> evStickinessHll _,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "ev_funnel"      -> evFunnelSql,
-    "ev_retention"   -> evRetentionSql,
-    "ev_anomaly"     -> evAnomalySql,
-    "ev_attribution" -> evAttributionSql,
-    "ev_markov"      -> evMarkovSql,
-    "ev_path"        -> evPathSql,
-    "ev_scd2"        -> evScd2Sql,
-    "ev_lifecycle"   -> evLifecycleSql,
-    "ev_stickiness"  -> evStickinessSql,
-    "ev_stickiness_hll" -> evStickinessHllSql,
+  val gated: Seq[Gated] = Seq(
+    Gated("ev_path",           evPath,          evPathSql),
+    Gated("ev_funnel",         evFunnel,        evFunnelSql),
+    Gated("ev_retention",      evRetention,     evRetentionSql),
+    Gated("ev_anomaly",        evAnomaly,       evAnomalySql),
+    Gated("ev_attribution",    evAttribution,   evAttributionSql),
+    Gated("ev_markov",         evMarkov,        evMarkovSql),
+    Gated("ev_scd2",           evScd2,          evScd2Sql),
+    Gated("ev_lifecycle",      evLifecycle,     evLifecycleSql),
+    Gated("ev_stickiness",     evStickiness,    evStickinessSql),
+    Gated("ev_stickiness_hll", evStickinessHll, evStickinessHllSql),
   )
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Gated
 import graft.sources.Tables.documents
 
 /** Graph-centrality ranking over corpus-derived graphs — the PageRank
@@ -614,15 +615,9 @@ object GraphRank {
        |ORDER BY doc_id""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ta_textrank"  -> taTextrank _,
-    "ta_keyphrase" -> taKeyphrase _,
-    "ta_summarize" -> taSummarize _,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "ta_textrank"  -> taTextrankSql,
-    "ta_keyphrase" -> taKeyphraseSql,
-    "ta_summarize" -> taSummarizeSql,
+  val gated: Seq[Gated] = Seq(
+    Gated("ta_textrank",  taTextrank,  taTextrankSql),
+    Gated("ta_keyphrase", taKeyphrase, taKeyphraseSql),
+    Gated("ta_summarize", taSummarize, taSummarizeSql),
   )
 }

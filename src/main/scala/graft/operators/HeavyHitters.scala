@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Gated
 import graft.functions.{tokens, SpaceSaving}
 import graft.sources.Tables._
 
@@ -59,11 +60,7 @@ object HeavyHitters {
        |ORDER BY cnt DESC, term
        |LIMIT $TopN""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ta_heavy_hitters" -> taHeavyHitters _,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "ta_heavy_hitters" -> taHeavyHittersSql,
+  val gated: Seq[Gated] = Seq(
+    Gated("ta_heavy_hitters", taHeavyHitters, taHeavyHittersSql),
   )
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
+import graft.Gated
 import graft.functions._
 import graft.sources.Tables._
 
@@ -87,15 +88,9 @@ object MapReduceQueries {
       |      GROUP BY 1) t
       |ORDER BY key""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "mr_wordcount"     -> mrWordCount _,
-    "mr_wordcount_kv"  -> mrWordCountKv _,
-    "mr_question_pct"  -> mrQuestionPct _,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "mr_wordcount"     -> mrWordCountSql,
-    "mr_wordcount_kv"  -> mrWordCountKvSql,
-    "mr_question_pct"  -> mrQuestionPctSql,
+  val gated: Seq[Gated] = Seq(
+    Gated("mr_wordcount",    mrWordCount,   mrWordCountSql),
+    Gated("mr_wordcount_kv", mrWordCountKv, mrWordCountKvSql),
+    Gated("mr_question_pct", mrQuestionPct, mrQuestionPctSql),
   )
 }

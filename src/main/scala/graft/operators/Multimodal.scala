@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
+import graft.Gated
 import graft.sources.Tables._
 
 /** Multimodal column plumbing: image/audio/video as opaque `binary`
@@ -593,25 +594,14 @@ object Multimodal {
        |WHERE rank <= $XModalTopK AND cosine >= $XModalMinCos
        |ORDER BY img_id, rank""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "mm_meta"            -> mmMeta _,
-    "mm_decode_features" -> mmDecodeFeatures _,
-    "mm_frame_sample"    -> mmFrameSample _,
-    "mm_resize"          -> mmResize _,
-    "mm_audio_energy"    -> mmAudioEnergy _,
-    "mm_silence_trim"    -> mmSilenceTrim _,
-    "mm_phash_dup"       -> mmPhashDup _,
-    "mm_pair_mine"       -> mmPairMine _,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "mm_meta"            -> mmMetaSql,
-    "mm_decode_features" -> mmDecodeFeaturesSql,
-    "mm_frame_sample"    -> mmFrameSampleSql,
-    "mm_resize"          -> mmResizeSql,
-    "mm_audio_energy"    -> mmAudioEnergySql,
-    "mm_silence_trim"    -> mmSilenceTrimSql,
-    "mm_phash_dup"       -> mmPhashDupSql,
-    "mm_pair_mine"       -> mmPairMineSql,
+  val gated: Seq[Gated] = Seq(
+    Gated("mm_meta",            mmMeta,           mmMetaSql),
+    Gated("mm_decode_features", mmDecodeFeatures, mmDecodeFeaturesSql),
+    Gated("mm_frame_sample",    mmFrameSample,    mmFrameSampleSql),
+    Gated("mm_resize",          mmResize,         mmResizeSql),
+    Gated("mm_audio_energy",    mmAudioEnergy,    mmAudioEnergySql),
+    Gated("mm_silence_trim",    mmSilenceTrim,    mmSilenceTrimSql),
+    Gated("mm_phash_dup",       mmPhashDup,       mmPhashDupSql),
+    Gated("mm_pair_mine",       mmPairMine,       mmPairMineSql),
   )
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
+import graft.Gated
 import graft.sources.Tables._
 
 /** PII detection + redaction — the scrubbing pass every production
@@ -152,11 +153,7 @@ object Pii {
        |FROM s3
        |ORDER BY doc_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ta_pii" -> taPii _,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "ta_pii" -> taPiiSql,
+  val gated: Seq[Gated] = Seq(
+    Gated("ta_pii", taPii, taPiiSql),
   )
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
+import graft.Gated
 import graft.functions._
 import graft.sources.Tables._
 
@@ -1120,31 +1121,17 @@ object Pipeline {
        |ORDER BY lang""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "pipe_mix"         -> pipeMix _,
-    "ta_chunk"         -> taChunk _,
-    "ta_pack"          -> taPack _,
-    "ta_contamination" -> taContamination _,
-    "pipe_e2e"         -> pipeE2e _,
-    "pipe_scrub"       -> pipeScrub _,
-    "pipe_tokenize"    -> pipeTokenize _,
-    "pipe_qa"          -> pipeQa _,
-    "pipe_ingest"      -> pipeIngest _,
-    "pipe_pairs"       -> pipePairs _,
-    "pipe_pairs_upsert" -> pipePairsUpsert _,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "pipe_mix"         -> pipeMixSql,
-    "ta_chunk"         -> taChunkSql,
-    "ta_pack"          -> taPackSql,
-    "ta_contamination" -> taContaminationSql,
-    "pipe_e2e"         -> pipeE2eSql,
-    "pipe_scrub"       -> pipeScrubSql,
-    "pipe_tokenize"    -> pipeTokenizeSql,
-    "pipe_qa"          -> pipeQaSql,
-    "pipe_ingest"      -> pipeIngestSql,
-    "pipe_pairs"       -> pipePairsSql,
-    "pipe_pairs_upsert" -> pipePairsUpsertSql,
+  val gated: Seq[Gated] = Seq(
+    Gated("pipe_mix",          pipeMix,         pipeMixSql),
+    Gated("ta_chunk",          taChunk,         taChunkSql),
+    Gated("ta_pack",           taPack,          taPackSql),
+    Gated("ta_contamination",  taContamination, taContaminationSql),
+    Gated("pipe_e2e",          pipeE2e,         pipeE2eSql),
+    Gated("pipe_scrub",        pipeScrub,       pipeScrubSql),
+    Gated("pipe_tokenize",     pipeTokenize,    pipeTokenizeSql),
+    Gated("pipe_qa",           pipeQa,          pipeQaSql),
+    Gated("pipe_ingest",       pipeIngest,      pipeIngestSql),
+    Gated("pipe_pairs",        pipePairs,       pipePairsSql),
+    Gated("pipe_pairs_upsert", pipePairsUpsert, pipePairsUpsertSql),
   )
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DoubleType
 
+import graft.Gated
 import graft.functions._
 import graft.sources.Tables._
 
@@ -486,49 +487,26 @@ object Relational {
       |GROUP BY o_orderpriority
       |ORDER BY o_orderpriority""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q1_agg"            -> q1Agg _,
-    "q2_filter_topn"    -> q2FilterTopn _,
-    "q3_join_agg"       -> q3JoinAgg _,
-    "q4_broadcast_join" -> q4BroadcastJoin _,
-    "q5_multi_join"     -> q5MultiJoin _,
-    "q6_pricing"        -> q6Pricing _,
-    "q7_semi_join"      -> q7SemiJoin _,
-    "q8_anti_join"      -> q8AntiJoin _,
-    "q9_window_topk"    -> q9WindowTopk _,
-    "q10_window_running" -> q10WindowRunning _,
-    "q11_distinct"      -> q11Distinct _,
-    "q12_setops"        -> q12SetOps _,
-    "q13_rollup"        -> q13Rollup _,
-    "q14_having"        -> q14Having _,
-    "q15_subquery_avg"  -> q15SubqueryAvg _,
-    "q16_date_agg"      -> q16DateAgg _,
-    "q17_string_funcs"  -> q17StringFuncs _,
-    "q18_cube"          -> q18Cube _,
-    "q19_outer_join"    -> q19OuterJoin _,
-    "q20_cond_agg"      -> q20CondAgg _,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q1_agg"            -> q1AggSql,
-    "q2_filter_topn"    -> q2FilterTopnSql,
-    "q3_join_agg"       -> q3JoinAggSql,
-    "q4_broadcast_join" -> q4BroadcastJoinSql,
-    "q5_multi_join"     -> q5MultiJoinSql,
-    "q6_pricing"        -> q6PricingSql,
-    "q7_semi_join"      -> q7SemiJoinSql,
-    "q8_anti_join"      -> q8AntiJoinSql,
-    "q9_window_topk"    -> q9WindowTopkSql,
-    "q10_window_running" -> q10WindowRunningSql,
-    "q11_distinct"      -> q11DistinctSql,
-    "q12_setops"        -> q12SetOpsSql,
-    "q13_rollup"        -> q13RollupSql,
-    "q14_having"        -> q14HavingSql,
-    "q15_subquery_avg"  -> q15SubqueryAvgSql,
-    "q16_date_agg"      -> q16DateAggSql,
-    "q17_string_funcs"  -> q17StringFuncsSql,
-    "q18_cube"          -> q18CubeSql,
-    "q19_outer_join"    -> q19OuterJoinSql,
-    "q20_cond_agg"      -> q20CondAggSql,
+  val gated: Seq[Gated] = Seq(
+    Gated("q1_agg",             q1Agg,            q1AggSql),
+    Gated("q2_filter_topn",     q2FilterTopn,     q2FilterTopnSql),
+    Gated("q3_join_agg",        q3JoinAgg,        q3JoinAggSql),
+    Gated("q4_broadcast_join",  q4BroadcastJoin,  q4BroadcastJoinSql),
+    Gated("q5_multi_join",      q5MultiJoin,      q5MultiJoinSql),
+    Gated("q6_pricing",         q6Pricing,        q6PricingSql),
+    Gated("q7_semi_join",       q7SemiJoin,       q7SemiJoinSql),
+    Gated("q8_anti_join",       q8AntiJoin,       q8AntiJoinSql),
+    Gated("q9_window_topk",     q9WindowTopk,     q9WindowTopkSql),
+    Gated("q10_window_running", q10WindowRunning, q10WindowRunningSql),
+    Gated("q11_distinct",       q11Distinct,      q11DistinctSql),
+    Gated("q12_setops",         q12SetOps,        q12SetOpsSql),
+    Gated("q13_rollup",         q13Rollup,        q13RollupSql),
+    Gated("q14_having",         q14Having,        q14HavingSql),
+    Gated("q15_subquery_avg",   q15SubqueryAvg,   q15SubqueryAvgSql),
+    Gated("q16_date_agg",       q16DateAgg,       q16DateAggSql),
+    Gated("q17_string_funcs",   q17StringFuncs,   q17StringFuncsSql),
+    Gated("q18_cube",           q18Cube,          q18CubeSql),
+    Gated("q19_outer_join",     q19OuterJoin,     q19OuterJoinSql),
+    Gated("q20_cond_agg",       q20CondAgg,       q20CondAggSql),
   )
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Gated
 import graft.functions._
 import graft.sources.Tables._
 
@@ -193,25 +194,14 @@ object Relational2 {
       |WHERE rn <= 3
       |ORDER BY o_custkey, o_totalprice DESC, o_orderkey DESC""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q27_approx"      -> q27Approx _,
-    "q28_topk_custom" -> q28TopkCustom _,
-    "q21_pivot"       -> q21Pivot _,
-    "q22_cross_join"  -> q22CrossJoin _,
-    "q23_union_all"   -> q23UnionAll _,
-    "q24_in_subquery" -> q24InSubquery _,
-    "q25_argminmax"   -> q25ArgMinMax _,
-    "q26_percentile"  -> q26Percentile _,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q27_approx"      -> q27ApproxSql,
-    "q28_topk_custom" -> q28TopkCustomSql,
-    "q21_pivot"       -> q21PivotSql,
-    "q22_cross_join"  -> q22CrossJoinSql,
-    "q23_union_all"   -> q23UnionAllSql,
-    "q24_in_subquery" -> q24InSubquerySql,
-    "q25_argminmax"   -> q25ArgMinMaxSql,
-    "q26_percentile"  -> q26PercentileSql,
+  val gated: Seq[Gated] = Seq(
+    Gated("q27_approx",      q27Approx,     q27ApproxSql),
+    Gated("q28_topk_custom", q28TopkCustom, q28TopkCustomSql),
+    Gated("q21_pivot",       q21Pivot,      q21PivotSql),
+    Gated("q22_cross_join",  q22CrossJoin,  q22CrossJoinSql),
+    Gated("q23_union_all",   q23UnionAll,   q23UnionAllSql),
+    Gated("q24_in_subquery", q24InSubquery, q24InSubquerySql),
+    Gated("q25_argminmax",   q25ArgMinMax,  q25ArgMinMaxSql),
+    Gated("q26_percentile",  q26Percentile, q26PercentileSql),
   )
 }

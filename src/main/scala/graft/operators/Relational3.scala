@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.IntegerType
 
+import graft.Gated
 import graft.functions._
 import graft.sources.Tables._
 
@@ -167,23 +168,13 @@ object Relational3 {
       |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
       |ORDER BY o_custkey, o_orderkey""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q35_window_nav" -> q35WindowNav _,
-    "q29_json"       -> q29Json _,
-    "q30_array_agg"  -> q30ArrayAgg _,
-    "q31_regex"      -> q31Regex _,
-    "q32_date_arith" -> q32DateArith _,
-    "q33_string_agg" -> q33StringAgg _,
-    "q34_null_ops"   -> q34NullOps _,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q35_window_nav" -> q35WindowNavSql,
-    "q29_json"       -> q29JsonSql,
-    "q30_array_agg"  -> q30ArrayAggSql,
-    "q31_regex"      -> q31RegexSql,
-    "q32_date_arith" -> q32DateArithSql,
-    "q33_string_agg" -> q33StringAggSql,
-    "q34_null_ops"   -> q34NullOpsSql,
+  val gated: Seq[Gated] = Seq(
+    Gated("q35_window_nav", q35WindowNav, q35WindowNavSql),
+    Gated("q29_json",       q29Json,      q29JsonSql),
+    Gated("q30_array_agg",  q30ArrayAgg,  q30ArrayAggSql),
+    Gated("q31_regex",      q31Regex,     q31RegexSql),
+    Gated("q32_date_arith", q32DateArith, q32DateArithSql),
+    Gated("q33_string_agg", q33StringAgg, q33StringAggSql),
+    Gated("q34_null_ops",   q34NullOps,   q34NullOpsSql),
   )
 }

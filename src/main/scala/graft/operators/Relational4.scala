@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Gated
 import graft.functions._
 import graft.sources.Tables._
 import graft.streaming.EventStreams
@@ -262,25 +263,14 @@ object Relational4 {
       |             ORDER BY o_totalprice DESC, o_orderkey)
       |ORDER BY o_orderpriority, o_totalprice DESC, o_orderkey""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q36_range_join"          -> q36RangeJoin _,
-    "q37_grouping_sets"       -> q37GroupingSets _,
-    "q38_hash_sample"         -> q38HashSample _,
-    "q39_histogram"           -> q39Histogram _,
-    "q40_column_stats"        -> q40ColumnStats _,
-    "q41_exists_correlated"   -> q41ExistsCorrelated _,
-    "q42_range_frame"         -> q42RangeFrame _,
-    "q43_window_ranks"        -> q43WindowRanks _,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q36_range_join"          -> q36RangeJoinSql,
-    "q37_grouping_sets"       -> q37GroupingSetsSql,
-    "q38_hash_sample"         -> q38HashSampleSql,
-    "q39_histogram"           -> q39HistogramSql,
-    "q40_column_stats"        -> q40ColumnStatsSql,
-    "q41_exists_correlated"   -> q41ExistsCorrelatedSql,
-    "q42_range_frame"         -> q42RangeFrameSql,
-    "q43_window_ranks"        -> q43WindowRanksSql,
+  val gated: Seq[Gated] = Seq(
+    Gated("q36_range_join",        q36RangeJoin,        q36RangeJoinSql),
+    Gated("q37_grouping_sets",     q37GroupingSets,     q37GroupingSetsSql),
+    Gated("q38_hash_sample",       q38HashSample,       q38HashSampleSql),
+    Gated("q39_histogram",         q39Histogram,        q39HistogramSql),
+    Gated("q40_column_stats",      q40ColumnStats,      q40ColumnStatsSql),
+    Gated("q41_exists_correlated", q41ExistsCorrelated, q41ExistsCorrelatedSql),
+    Gated("q42_range_frame",       q42RangeFrame,       q42RangeFrameSql),
+    Gated("q43_window_ranks",      q43WindowRanks,      q43WindowRanksSql),
   )
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Gated
 import graft.functions._
 import graft.sources.Tables._
 
@@ -120,15 +121,9 @@ object Relational5 {
       |GROUP BY o_orderpriority
       |ORDER BY o_orderpriority""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q44_corr_exact" -> q44CorrExact _,
-    "q45_unpivot"    -> q45Unpivot _,
-    "q46_bit_agg"    -> q46BitAgg _,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q44_corr_exact" -> q44CorrExactSql,
-    "q45_unpivot"    -> q45UnpivotSql,
-    "q46_bit_agg"    -> q46BitAggSql,
+  val gated: Seq[Gated] = Seq(
+    Gated("q44_corr_exact", q44CorrExact, q44CorrExactSql),
+    Gated("q45_unpivot",    q45Unpivot,   q45UnpivotSql),
+    Gated("q46_bit_agg",    q46BitAgg,    q46BitAggSql),
   )
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
+import graft.Gated
 import graft.functions._
 import graft.sources.Tables._
 
@@ -2458,41 +2459,22 @@ object Similarity {
        |WHERE rank <= $HybridTopK
        |ORDER BY query_id, rank""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sim_hybrid"     -> simHybrid _,
-    "sim_topk_brute" -> simTopkBrute _,
-    "sim_mmr"        -> simMmr _,
-    "sim_mmr_served" -> simMmrServed _,
-    "sim_ann_lsh"    -> simAnnLsh _,
-    "sim_ivf"        -> simIvf _,
-    "sim_ivf_upsert" -> simIvfUpsert _,
-    "sim_knn_join"   -> simKnnJoin _,
-    "sim_filtered_knn" -> simFilteredKnn _,
-    "emb_quantize"   -> embQuantize _,
-    "emb_outliers"   -> embOutliers _,
-    "emb_assign2"    -> embAssign2 _,
-    "emb_kmeans"     -> embKmeans _,
-    "sim_recall"     -> simRecall _,
-    "sim_pq"         -> simPq _,
-    "sim_ivfpq"      -> simIvfPq _,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "sim_hybrid"     -> simHybridSql,
-    "sim_topk_brute" -> simTopkBruteSql,
-    "sim_mmr"        -> simMmrSql,
-    "sim_mmr_served" -> simMmrServedSql,
-    "sim_ann_lsh"    -> simAnnLshSql,
-    "sim_ivf"        -> simIvfSql,
-    "sim_ivf_upsert" -> simIvfUpsertSql,
-    "sim_knn_join"   -> simKnnJoinSql,
-    "sim_filtered_knn" -> simFilteredKnnSql,
-    "emb_quantize"   -> embQuantizeSql,
-    "emb_outliers"   -> embOutliersSql,
-    "emb_assign2"    -> embAssign2Sql,
-    "emb_kmeans"     -> embKmeansSql,
-    "sim_recall"     -> simRecallSql,
-    "sim_pq"         -> simPqSql,
-    "sim_ivfpq"      -> simIvfPqSql,
+  val gated: Seq[Gated] = Seq(
+    Gated("sim_hybrid",       simHybrid,      simHybridSql),
+    Gated("sim_topk_brute",   simTopkBrute,   simTopkBruteSql),
+    Gated("sim_mmr",          simMmr,         simMmrSql),
+    Gated("sim_mmr_served",   simMmrServed,   simMmrServedSql),
+    Gated("sim_ann_lsh",      simAnnLsh,      simAnnLshSql),
+    Gated("sim_ivf",          simIvf,         simIvfSql),
+    Gated("sim_ivf_upsert",   simIvfUpsert,   simIvfUpsertSql),
+    Gated("sim_knn_join",     simKnnJoin,     simKnnJoinSql),
+    Gated("sim_filtered_knn", simFilteredKnn, simFilteredKnnSql),
+    Gated("emb_quantize",     embQuantize,    embQuantizeSql),
+    Gated("emb_outliers",     embOutliers,    embOutliersSql),
+    Gated("emb_assign2",      embAssign2,     embAssign2Sql),
+    Gated("emb_kmeans",       embKmeans,      embKmeansSql),
+    Gated("sim_recall",       simRecall,      simRecallSql),
+    Gated("sim_pq",           simPq,          simPqSql),
+    Gated("sim_ivfpq",        simIvfPq,       simIvfPqSql),
   )
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
+import graft.Gated
 import graft.functions._
 import graft.functions.RollingHash.rollingHash
 import graft.sources.Tables._
@@ -1397,41 +1398,22 @@ object TextAnalysis {
        |WHERE rank <= $Bm25TopDocs
        |ORDER BY query_id, rank""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ta_bm25"        -> taBm25 _,
-    "ta_boilerplate" -> taBoilerplate _,
-    "ta_diversity"   -> taDiversity _,
-    "ta_length_tails" -> taLengthTails _,
-    "ta_normalize"   -> taNormalize _,
-    "ta_token_stats" -> taTokenStats _,
-    "ta_bpe_tokens"  -> taBpeTokens _,
-    "ta_quality"     -> taQuality _,
-    "ta_langid"      -> taLangid _,
-    "ta_fingerprint" -> taFingerprint _,
-    "ta_repetition"  -> taRepetition _,
-    "ta_tfidf"       -> taTfidf _,
-    "ta_unigram_score" -> taUnigramScore _,
-    "ta_bigram_score"  -> taBigramScore _,
-    "ta_bpe_train"     -> taBpeTrain _,
-    "ta_bpe_apply"     -> taBpeApply _,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "ta_boilerplate" -> taBoilerplateSql,
-    "ta_diversity"   -> taDiversitySql,
-    "ta_length_tails" -> taLengthTailsSql,
-    "ta_normalize"   -> taNormalizeSql,
-    "ta_token_stats" -> taTokenStatsSql,
-    "ta_bpe_tokens"  -> taBpeTokensSql,
-    "ta_quality"     -> taQualitySql,
-    "ta_langid"      -> taLangidSql,
-    "ta_fingerprint" -> taFingerprintSql,
-    "ta_repetition"  -> taRepetitionSql,
-    "ta_tfidf"       -> taTfidfSql,
-    "ta_unigram_score" -> taUnigramScoreSql,
-    "ta_bigram_score"  -> taBigramScoreSql,
-    "ta_bpe_train"     -> taBpeTrainSql,
-    "ta_bpe_apply"     -> taBpeApplySql,
-    "ta_bm25"        -> taBm25Sql,
+  val gated: Seq[Gated] = Seq(
+    Gated("ta_bm25",          taBm25,         taBm25Sql),
+    Gated("ta_boilerplate",   taBoilerplate,  taBoilerplateSql),
+    Gated("ta_diversity",     taDiversity,    taDiversitySql),
+    Gated("ta_length_tails",  taLengthTails,  taLengthTailsSql),
+    Gated("ta_normalize",     taNormalize,    taNormalizeSql),
+    Gated("ta_token_stats",   taTokenStats,   taTokenStatsSql),
+    Gated("ta_bpe_tokens",    taBpeTokens,    taBpeTokensSql),
+    Gated("ta_quality",       taQuality,      taQualitySql),
+    Gated("ta_langid",        taLangid,       taLangidSql),
+    Gated("ta_fingerprint",   taFingerprint,  taFingerprintSql),
+    Gated("ta_repetition",    taRepetition,   taRepetitionSql),
+    Gated("ta_tfidf",         taTfidf,        taTfidfSql),
+    Gated("ta_unigram_score", taUnigramScore, taUnigramScoreSql),
+    Gated("ta_bigram_score",  taBigramScore,  taBigramScoreSql),
+    Gated("ta_bpe_train",     taBpeTrain,     taBpeTrainSql),
+    Gated("ta_bpe_apply",     taBpeApply,     taBpeApplySql),
   )
 }

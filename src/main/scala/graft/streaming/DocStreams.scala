@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
+import graft.Gated
 import graft.functions.{tokens, MinHashSig, WordShingleHashesExpr, WordShinglesExpr}
 import graft.operators.{Pii, Pipeline, TextAnalysis}
 
@@ -747,15 +748,9 @@ object DocStreams {
        |ORDER BY win_start_s, doc_id""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "st_bm25"    -> stBm25 _,
-    "st_drift"   -> stDrift _,
-    "st_neardup" -> stNeardup _,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "st_bm25"    -> stBm25Sql,
-    "st_drift"   -> stDriftSql,
-    "st_neardup" -> stNeardupSql,
+  val gated: Seq[Gated] = Seq(
+    Gated("st_bm25",    stBm25,    stBm25Sql),
+    Gated("st_drift",   stDrift,   stDriftSql),
+    Gated("st_neardup", stNeardup, stNeardupSql),
   )
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
+import graft.Gated
 import graft.functions._
 import graft.sources.Tables
 
@@ -1076,29 +1077,16 @@ object EventStreams {
       |FROM iv WHERE valid_to_us IS NOT NULL
       |ORDER BY user_id, valid_from_us""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "st_attr"           -> stAttr _,
-    "st_scd2"           -> stScd2 _,
-    "st_anomaly"        -> stAnomaly _,
-    "st_window_agg"     -> stWindowAgg _,
-    "st_sliding_window" -> stSlidingWindow _,
-    "st_sessionize"     -> stSessionize _,
-    "st_asof_enrich"    -> stAsofEnrich _,
-    "st_latest_by_key"  -> stLatestByKey _,
-    "st_window_topk"    -> stWindowTopk _,
-    "st_dedup"          -> stDedup _,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "st_attr"           -> stAttrSql,
-    "st_scd2"           -> stScd2Sql,
-    "st_anomaly"        -> stAnomalySql,
-    "st_window_agg"     -> stWindowAggSql,
-    "st_sliding_window" -> stSlidingWindowSql,
-    "st_sessionize"     -> stSessionizeSql,
-    "st_asof_enrich"    -> stAsofEnrichSql,
-    "st_latest_by_key"  -> stLatestByKeySql,
-    "st_window_topk"    -> stWindowTopkSql,
-    "st_dedup"          -> stDedupSql,
+  val gated: Seq[Gated] = Seq(
+    Gated("st_attr",           stAttr,          stAttrSql),
+    Gated("st_scd2",           stScd2,          stScd2Sql),
+    Gated("st_anomaly",        stAnomaly,       stAnomalySql),
+    Gated("st_window_agg",     stWindowAgg,     stWindowAggSql),
+    Gated("st_sliding_window", stSlidingWindow, stSlidingWindowSql),
+    Gated("st_sessionize",     stSessionize,    stSessionizeSql),
+    Gated("st_asof_enrich",    stAsofEnrich,    stAsofEnrichSql),
+    Gated("st_latest_by_key",  stLatestByKey,   stLatestByKeySql),
+    Gated("st_window_topk",    stWindowTopk,    stWindowTopkSql),
+    Gated("st_dedup",          stDedup,         stDedupSql),
   )
 }

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Gated
 import graft.functions.{HyperplaneBuckets, VectorExpressions}
 import graft.operators.Similarity
 import graft.sources.Tables
@@ -156,11 +157,7 @@ object VecStreams {
        |ORDER BY q_id""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "st_ann" -> stAnn _,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "st_ann" -> stAnnSql,
+  val gated: Seq[Gated] = Seq(
+    Gated("st_ann", stAnn, stAnnSql),
   )
 }

@@ -80,7 +80,7 @@ class RelCacheSpec extends SparkTestBase {
   }
 
   test("Corpus.evictCaches frees every artifact of a dir, not another dir's") {
-    graft.SparkEntry.queries // initializes every declaring operator object
+    assert(graft.SparkEntry.queries.nonEmpty) // initializes every declaring operator object
     val keep = tiny(spark, "/corpus/y")
     val built = Artifacts.all.map(a => a.name -> idsOf(a(spark, sf0001)))
     assert(built.forall(_._2.nonEmpty), built)
@@ -96,7 +96,7 @@ class RelCacheSpec extends SparkTestBase {
   }
 
   test("a duplicate artifact name is rejected at declaration") {
-    graft.SparkEntry.queries
+    assert(graft.SparkEntry.queries.nonEmpty)
     intercept[IllegalArgumentException] {
       Artifacts.declare("tokrel")((s, _) => s.range(1).toDF("x"))
     }
