@@ -60,6 +60,55 @@ class IndexReadJobsSpec extends SparkTestBase {
     loaded.close()
   }
 
+  test("every family's refresh, no-op refresh and load cost a pinned number of Spark jobs") {
+    val st = new Storage(spark, Files.createTempDirectory("graft-jobs-fam-").toString)
+    val e = graft.sources.Tables.embeddings(spark, sf0001)
+    val docs = graft.sources.Tables.documents(spark, sf0001)
+    val ev = graft.sources.Tables.events(spark, sf0001)
+    val (vCut, dCut, eCut) =
+      (e.count() * 4 / 5, docs.count() * 4 / 5, ev.count() * 4 / 5)
+    st.putVersioned("vecs", e.filter($"vec_id" < vCut))
+    st.putVersioned("docs", docs.filter($"doc_id" < dCut))
+    st.putVersioned("events", ev.filter($"event_id" < eCut))
+    val (vv, dv) = (st.versions("vecs").last, st.versions("docs").last)
+    val pq = Corpus.buildIvfPqIndex(st.readVersioned("vecs"))
+    Corpus.saveIvfPqIndex(pq, st, "pq", corpusVersion = vv)
+    val hy = Corpus.buildHybridIndex(st.readVersioned("docs"), st.readVersioned("vecs"))
+    Corpus.saveHybridIndex(hy, st, "hy", vv, st.readVersioned("docs"), dv)
+    val rm = Corpus.buildRankModel(st.readVersioned("docs"))
+    Corpus.saveRankModel(rm, st, "tr", docsCorpusVersion = dv)
+    Events.buildGrowthLedger(st, "events", "gl")
+    pq.close(); hy.close(); rm.close()
+    st.appendVersioned("vecs", e.filter($"vec_id" >= vCut))
+    st.appendVersioned("docs", docs.filter($"doc_id" >= dCut))
+    st.appendVersioned("events", ev.filter($"event_id" >= eCut))
+    def loaded[H](load: => H)(close: H => Unit): Int = {
+      var h = Option.empty[H]
+      try JobCount(spark) { h = Some(load) } finally h.foreach(close)
+    }
+    val refreshes = Seq(
+      "ivfpq" -> (() => Corpus.refreshIvfPqIndex(st, "pq", "vecs")),
+      "hybrid" -> (() => Corpus.refreshHybridIndex(st, "hy", "docs", "vecs")),
+      "rank" -> (() => Corpus.refreshRankModel(st, "tr", "docs")),
+      "ledger" -> (() => Events.refreshGrowthLedger(st, "events", "gl")))
+    val measured = refreshes.map { case (f, r) => s"$f refresh" -> JobCount(spark)(r()) } ++
+      refreshes.map { case (f, r) => s"$f no-op refresh" -> JobCount(spark)(r()) } ++ Seq(
+        "ivfpq load" -> loaded(Corpus.loadIvfPqIndex(st, "pq"))(_.close()),
+        "hybrid load" -> loaded(Corpus.loadHybridIndex(st, "hy"))(_.close()),
+        "rank load" -> loaded(Corpus.loadRankModel(st, "tr"))(_.close()),
+        "ledger read" -> JobCount(spark)(Events.readGrowthLedger(st, "gl")))
+    // refresh: the pointer collect, the delta localCheckpoint and its one
+    // count, then each family's fold; no-op: the pointer collect (hybrid
+    // adds its dense arm's); load: the pointer collect(s) and one
+    // localCheckpoint per arm
+    assert(measured.toMap == Map(
+      "ivfpq refresh" -> 12, "hybrid refresh" -> 16, "rank refresh" -> 41,
+      "ledger refresh" -> 25, "ivfpq no-op refresh" -> 1,
+      "hybrid no-op refresh" -> 2, "rank no-op refresh" -> 1,
+      "ledger no-op refresh" -> 1, "ivfpq load" -> 6, "hybrid load" -> 5,
+      "rank load" -> 3, "ledger read" -> 1))
+  }
+
   test("an index saved before manifests recorded schemas still loads, refreshes and serves") {
     val wh = Files.createTempDirectory("graft-jobs-old-").toString
     val (st, delta) = savedIndex(wh)
