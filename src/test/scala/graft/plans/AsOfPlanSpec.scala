@@ -42,6 +42,21 @@ class AsOfPlanSpec extends SparkTestBase {
     assert(!p.contains("Union"), "custom path must not union-pad:\n" + p)
   }
 
+  test("Events.asOfJoin nests the build row as asof, also when both sides share column names") {
+    val trades = Seq(("a", 10L, 1.0), ("a", 25L, 2.0), ("b", 5L, 3.0), ("c", 7L, 4.0))
+      .toDF("sym", "t", "px")
+    val quotes = Seq(("a", 10L, 100.0), ("a", 20L, 101.0), ("b", 6L, 102.0), ("c", 1L, 103.0))
+      .toDF("sym", "t", "bid")
+    val got = graft.api.Events.asOfJoin(trades, quotes, "sym", "sym", "t", "t")
+    assert(got.columns.toSeq == Seq("sym", "t", "px", "asof"))
+    assert(got.select("asof.*").columns.toSeq == Seq("sym", "t", "bid"))
+    val rows = got.select($"sym", $"t", $"px", $"asof.sym", $"asof.t", $"asof.bid")
+      .as[(String, Long, Double, String, Long, Double)].collect().toSet
+    // inclusive at equal ts, latest prior wins, no prior quote drops
+    assert(rows == Set(("a", 10L, 1.0, "a", 10L, 100.0),
+      ("a", 25L, 2.0, "a", 20L, 101.0), ("c", 7L, 4.0, "c", 1L, 103.0)))
+  }
+
   test("forward as-of: earliest at-or-after match; consecutive probes share one future row") {
     import spark.implicits._
     val probe = Seq(
