@@ -40,8 +40,9 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // manifest: lets the gate detect rows-only queries that failed (they
-    // have no oracle entry and would otherwise vanish silently)
+    // manifest: the selected gated query names, one a line — the key set
+    // of oracle_sql.json, since every Gated row carries its oracle SQL;
+    // written beside failures.txt for drivers that read either
     Files.writeString(Paths.get(s"$outDir/queries.txt"),
       SparkEntry.queries.keys.toSeq.filter(selected).sorted.mkString("\n"))
     Files.writeString(Paths.get(s"$outDir/failures.txt"),

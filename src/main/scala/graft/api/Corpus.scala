@@ -717,10 +717,11 @@ object Corpus {
     */
   def saveAnnIndex(index: AnnIndex, storage: graft.sources.Storage,
       name: String, corpusVersion: Long): Long = {
-    val vc = storage.putVersioned(s"${name}__centroids", index.centroids)
-    val vl = storage.putVersioned(s"${name}__lists", index.lists)
-    Pointers.Ann.commit(storage, name, "centroids_version" -> vc,
-      "lists_version" -> vl, "corpus_version" -> corpusVersion)
+    val A = Pointers.Ann
+    A.commit(storage, name,
+      "centroids_version" -> A.put(storage, name, "centroids", index.centroids),
+      "lists_version" -> A.put(storage, name, "lists", index.lists),
+      "corpus_version" -> corpusVersion)
   }
 
   /** CDC-driven INCREMENTAL maintenance of a persisted ANN index — the
@@ -753,45 +754,10 @@ object Corpus {
     */
   def refreshAnnIndex(storage: graft.sources.Storage, name: String,
       corpusTable: String, id: String = "vec_id",
-      vec: String = "embedding"): Long = {
-    val ptr = Pointers.Ann.row(storage, name)
-    require(ptr.schema.fieldNames.contains("corpus_version") &&
-      ptr.getAs[Long]("corpus_version") >= 0L,
-      s"index '$name' was saved without a corpus version; re-save with " +
-        "saveAnnIndex(index, storage, name, corpusVersion) to enable " +
-        "incremental refresh")
-    val sinceV = ptr.getAs[Long]("corpus_version")
-    val vcs = storage.versions(corpusTable)
-    require(vcs.nonEmpty, s"no versioned corpus table '$corpusTable'")
-    val curV = vcs.last
-    if (curV == sinceV) return Pointers.Ann.latest(storage, name)
-    // the delta read is PINNED to curV — the version the pointer will
-    // record as consumed. Resolving "latest" here and again inside the
-    // read races a concurrent ingest append: its rows would land in
-    // tonight's lists but not in the checkpoint, and tomorrow's refresh
-    // would re-consume them — permanent double-indexing
-    // localCheckpoint ONCE: the isEmpty probe and the assignment kernel
-    // below otherwise each re-read the same parquet delta window — a
-    // double O(delta) scan per nightly refresh (mirrors refreshIvfPqIndex)
-    val delta = storage.readVersionedSince(corpusTable, sinceV,
-        toVersion = curV)
-      .select(col(id).as("vec_id"), col(vec).as("embedding"))
-      .localCheckpoint()
-    // free the eager checkpoints on EVERY exit, thrown ones included —
-    // a refresh that loses its pointer CAS to a racing twin would
-    // otherwise pin the O(delta) blocks for the session lifetime, once
-    // per failed boundary in the continuous loop
-    try {
-      val nDelta = delta.count()
-      if (nDelta == 0L)
-        // the corpus advanced by maintenance only (compaction, rollback
-        // forward, empty batches): nothing to index — re-pin the consumed
-        // version so future refreshes diff from here instead of re-walking
-        // the content-equal chain, and never commit a junk empty data dir
-        return Pointers.Ann.recommit(storage, name, ptr, "corpus_version" -> curV)
-      annFold(storage, name, ptr, delta, nDelta, curV)
-    } finally graft.operators.Artifacts.freeLocalCheckpoint(delta)
-  }
+      vec: String = "embedding"): Long =
+    Pointers.Ann.refresh(storage, name, "corpus", corpusTable,
+      _.select(col(id).as("vec_id"), col(vec).as("embedding")))(
+      annFold(storage, name, _, _, _, _))
 
   /** The ann family's delta fold, shared by the families that nest one:
     * assign the `n` vectors of `delta` to their home cells under the
@@ -802,23 +768,15 @@ object Corpus {
   private def annFold(storage: graft.sources.Storage, name: String,
       ptr: org.apache.spark.sql.Row, delta: DataFrame, n: Long,
       corpusV: Long): Long = {
-    val cent = Pointers.Ann.read(storage, name, ptr, "centroids")
-      .localCheckpoint()
+    val A = Pointers.Ann
+    val cent = A.load(storage, name, ptr, "centroids")
     try {
-      val deltaLists = graft.operators.Similarity.kernelProbeCells(delta,
-        cent, 1, "c_id", "cv_c", "cn_c")
-      // append ONTO the pointer's pinned lists version, never "latest":
-      // a crashed earlier refresh (died between its lists append and its
-      // pointer commit) leaves an orphan lists version, and stacking this
-      // delta on top of it would serve every orphaned row TWICE. The
-      // base-pinned commit rebuilds from the last version actually served,
-      // so re-runs and double-fired refreshes are idempotent by
-      // construction (each produces a version with the delta exactly once)
-      val vl = storage.appendVersionedOnto(s"${name}__lists", deltaLists,
-        ptr.getAs[Long]("lists_version"))
-      Pointers.Ann.recommit(storage, name, ptr, "lists_version" -> vl,
+      val vl = A.appendOnto(storage, name, ptr, "lists",
+        graft.operators.Similarity.kernelProbeCells(delta, cent, 1, "c_id",
+          "cv_c", "cn_c"))
+      A.recommit(storage, name, ptr, "lists_version" -> vl,
         "corpus_version" -> corpusV,
-        "stale_rows" -> (Pointers.Ann.get(ptr, "stale_rows") + n))
+        "stale_rows" -> (A.get(ptr, "stale_rows") + n))
     } finally graft.operators.Artifacts.freeLocalCheckpoint(cent)
   }
 
@@ -933,9 +891,8 @@ object Corpus {
   def loadAnnIndex(storage: graft.sources.Storage, name: String,
       version: Long = -1L): AnnIndex = {
     val ptr = Pointers.Ann.row(storage, name, version)
-    AnnIndex(
-      Pointers.Ann.read(storage, name, ptr, "centroids").localCheckpoint(),
-      Pointers.Ann.read(storage, name, ptr, "lists").localCheckpoint())
+    AnnIndex(Pointers.Ann.load(storage, name, ptr, "centroids"),
+      Pointers.Ann.load(storage, name, ptr, "lists"))
   }
 
   /** Train a [[Tokenizer]] over a `(doc_id, text)` corpus: `n` BPE
@@ -966,10 +923,10 @@ object Corpus {
     */
   def saveTokenizer(tok: Tokenizer, storage: graft.sources.Storage,
       name: String): Long = {
-    val vm = storage.putVersioned(s"${name}__merges", tok.merges)
-    val vv = storage.putVersioned(s"${name}__vocab", tok.vocab)
-    Pointers.Tok.commit(storage, name, "merges_version" -> vm,
-      "vocab_version" -> vv)
+    val T = Pointers.Tok
+    T.commit(storage, name,
+      "merges_version" -> T.put(storage, name, "merges", tok.merges),
+      "vocab_version" -> T.put(storage, name, "vocab", tok.vocab))
   }
 
   /** Rehydrate a persisted [[Tokenizer]] at `version` (default: latest
@@ -981,9 +938,8 @@ object Corpus {
   def loadTokenizer(storage: graft.sources.Storage, name: String,
       version: Long = -1L): Tokenizer = {
     val ptr = Pointers.Tok.row(storage, name, version)
-    Tokenizer(
-      Pointers.Tok.read(storage, name, ptr, "merges").localCheckpoint(),
-      Pointers.Tok.read(storage, name, ptr, "vocab").localCheckpoint())
+    Tokenizer(Pointers.Tok.load(storage, name, ptr, "merges"),
+      Pointers.Tok.load(storage, name, ptr, "vocab"))
   }
 
   // ------------------------------------------------- TextRank model
@@ -1035,10 +991,11 @@ object Corpus {
     */
   def saveRankModel(model: RankModel, storage: graft.sources.Storage,
       name: String, docsCorpusVersion: Long = -1L): Long = {
-    val vp = storage.putVersioned(s"${name}__pairs", model.pairs)
-    val vr = storage.putVersioned(s"${name}__ranks", model.ranks)
-    Pointers.TextRank.commit(storage, name, "pairs_version" -> vp,
-      "ranks_version" -> vr, "docs_version" -> docsCorpusVersion)
+    val R = Pointers.TextRank
+    R.commit(storage, name,
+      "pairs_version" -> R.put(storage, name, "pairs", model.pairs),
+      "ranks_version" -> R.put(storage, name, "ranks", model.ranks),
+      "docs_version" -> docsCorpusVersion)
   }
 
   /** Rehydrate a persisted [[RankModel]] at `version` (default: latest
@@ -1052,9 +1009,8 @@ object Corpus {
   def loadRankModel(storage: graft.sources.Storage, name: String,
       version: Long = -1L): RankModel = {
     val ptr = Pointers.TextRank.row(storage, name, version)
-    RankModel(
-      Pointers.TextRank.read(storage, name, ptr, "pairs").localCheckpoint(),
-      Pointers.TextRank.read(storage, name, ptr, "ranks").localCheckpoint())
+    RankModel(Pointers.TextRank.load(storage, name, ptr, "pairs"),
+      Pointers.TextRank.load(storage, name, ptr, "ranks"))
   }
 
   /** CDC refresh of a persisted [[RankModel]] — O(delta + vocabulary),
@@ -1071,29 +1027,11 @@ object Corpus {
     */
   def refreshRankModel(storage: graft.sources.Storage, name: String,
       docsTable: String): Long = {
-    val GR = graft.operators.GraphRank
-    val ptr = Pointers.TextRank.row(storage, name)
-    val sinceV = ptr.getAs[Long]("docs_version")
-    require(sinceV >= 0L,
-      s"rank model '$name' was saved without a docs corpus version; " +
-        "re-save with saveRankModel(model, storage, name, docsVersion) " +
-        "to enable incremental refresh")
-    val dvs = storage.versions(docsTable)
-    require(dvs.nonEmpty, s"no versioned docs table '$docsTable'")
-    // pin the head ONCE (the refreshAnnIndex race comment applies)
-    val curV = dvs.last
-    if (curV == sinceV) return Pointers.TextRank.latest(storage, name)
-    val delta = storage.readVersionedSince(docsTable, sinceV,
-        toVersion = curV)
-      .select(col("doc_id"), col("text"))
-      .localCheckpoint()
-    try {
-      if (delta.isEmpty)
-        // maintenance-only advance: re-pin so future diffs start here
-        return Pointers.TextRank.recommit(storage, name, ptr,
-          "docs_version" -> curV)
-      val base = Pointers.TextRank.read(storage, name, ptr, "pairs")
-      val folded = base.unionAll(GR.pairCounts(delta))
+    val R = Pointers.TextRank
+    R.refresh(storage, name, "docs", docsTable,
+        _.select(col("doc_id"), col("text"))) { (ptr, delta, _, head) =>
+      val folded = R.read(storage, name, ptr, "pairs")
+        .unionAll(graft.operators.GraphRank.pairCounts(delta))
         .groupBy(col("w1"), col("w2")).agg(sum(col("n")).as("n"))
         .localCheckpoint()
       // a failed rank stage (the continuous loop's crash window) must
@@ -1104,13 +1042,9 @@ object Corpus {
         catch { case t: Throwable =>
           graft.operators.Artifacts.freeLocalCheckpoint(folded); throw t
         }
-      try {
-        val vp = storage.putVersioned(s"${name}__pairs", model.pairs)
-        val vr = storage.putVersioned(s"${name}__ranks", model.ranks)
-        Pointers.TextRank.commit(storage, name, "pairs_version" -> vp,
-          "ranks_version" -> vr, "docs_version" -> curV)
-      } finally model.close()
-    } finally graft.operators.Artifacts.freeLocalCheckpoint(delta)
+      try saveRankModel(model, storage, name, head)
+      finally model.close()
+    }
   }
 
   /** [[vacuumAnnIndex]] for a persisted rank-model family: retain the
@@ -1181,11 +1115,11 @@ object Corpus {
     */
   def saveHybridIndex(index: HybridIndex, storage: graft.sources.Storage,
       name: String, vectorsCorpusVersion: Long): Long = {
-    val vp = storage.putVersioned(s"${name}__postings", index.postings)
-    val va = saveAnnIndex(index.ann, storage, s"${name}__dense",
-      vectorsCorpusVersion)
-    Pointers.Hybrid.commit(storage, name, "postings_version" -> vp,
-      "dense_version" -> va)
+    val H = Pointers.Hybrid
+    H.commit(storage, name,
+      "postings_version" -> H.put(storage, name, "postings", index.postings),
+      "dense_version" -> saveAnnIndex(index.ann, storage,
+        H.nested(name, "dense"), vectorsCorpusVersion))
   }
 
   /** The FULL [[saveHybridIndex]]: additionally freeze the lexical
@@ -1203,10 +1137,10 @@ object Corpus {
   def saveHybridIndex(index: HybridIndex, storage: graft.sources.Storage,
       name: String, vectorsCorpusVersion: Long, docs: DataFrame,
       docsCorpusVersion: Long): Long = {
-    val vp = storage.putVersioned(s"${name}__postings", index.postings)
-    val va = saveAnnIndex(index.ann, storage, s"${name}__dense",
-      vectorsCorpusVersion)
-    frozenCommit(storage, name, vp, va, docs, docsCorpusVersion)
+    val H = Pointers.Hybrid
+    val vp = H.put(storage, name, "postings", index.postings)
+    frozenCommit(storage, name, vp, saveAnnIndex(index.ann, storage,
+      H.nested(name, "dense"), vectorsCorpusVersion), docs, docsCorpusVersion)
   }
 
   /** Freeze the lexical stats from a COMMITTED postings snapshot plus
@@ -1222,13 +1156,15 @@ object Corpus {
   private def frozenCommit(storage: graft.sources.Storage,
       name: String, postingsV: Long, denseV: Long, docs: DataFrame,
       docsV: Long): Long = {
-    val committed = storage.readVersioned(s"${name}__postings", postingsV)
-    val vdf = storage.putVersioned(s"${name}__lexdf",
+    val H = Pointers.Hybrid
+    val committed =
+      storage.readVersioned(H.table(name, "postings"), postingsV)
+    val vdf = H.put(storage, name, "lexstats",
       committed.groupBy(col("term")).agg(count(lit(1)).as("df")))
     val sumDl = committed.select(col("doc_id"), col("dl")).distinct()
       .agg(coalesce(sum(col("dl").cast("long")), lit(0L)))
       .collect()(0).getLong(0)
-    Pointers.Hybrid.commit(storage, name, "postings_version" -> postingsV,
+    H.commit(storage, name, "postings_version" -> postingsV,
       "dense_version" -> denseV, "lexdf_version" -> vdf,
       "docs_version" -> docsV, "n_docs" -> docs.count(), "sum_dl" -> sumDl)
   }
@@ -1261,13 +1197,13 @@ object Corpus {
     */
   def refreshHybridIndex(storage: graft.sources.Storage, name: String,
       docsTable: String, vectorsTable: String): Long = {
-    val vd = refreshAnnIndex(storage, s"${name}__dense", vectorsTable)
     val H = Pointers.Hybrid
+    val vd = refreshAnnIndex(storage, H.nested(name, "dense"), vectorsTable)
     val ptr = H.row(storage, name)
-    val sinceV = H.get(ptr, "docs_version")
+    val sinceV = H.pinned(ptr, "docs")
     val dvs = storage.versions(docsTable)
     require(dvs.nonEmpty, s"no versioned docs table '$docsTable'")
-    if (sinceV < 0L || H.get(ptr, "lexdf_version") < 0L ||
+    if (sinceV < 0L || H.pinned(ptr, "lexstats") < 0L ||
         !dvs.contains(sinceV) ||
         !H.read(storage, name, ptr, "postings").columns.contains("dl"))
       // exact path: no frozen stats to append under (legacy save), OR
@@ -1281,43 +1217,28 @@ object Corpus {
       // re-freeze stats at the current snapshot, and the next refresh
       // goes O(delta)
       return exactPostingsCommit(storage, name, docsTable, vd)
-    // resolve the docs head ONCE and pin reads + checkpoint to it —
-    // re-resolving "latest" races a concurrent docs append (rows in
-    // tonight's postings but not in the checkpoint → re-consumed
-    // forever; see refreshAnnIndex)
+    // the consume step of PointerLayout.refresh, spelled out because
+    // both of its re-pins also carry the dense arm's new pin: the docs
+    // head is resolved ONCE and the delta read pinned to it
     val curV = dvs.last
-    if (curV == sinceV) {
-      // docs unchanged. BOTH arms unchanged → true no-op: commit
-      // nothing (a nightly loop over a quiet corpus must not grow the
-      // pointer table one content-identical version per night —
-      // refreshAnnIndex's no-op posture). Dense advanced → carry the
-      // lexical arm forward and re-pin.
-      if (vd == ptr.getAs[Long]("dense_version"))
-        return H.latest(storage, name)
-      return H.recommit(storage, name, ptr, "dense_version" -> vd)
-    }
+    if (curV == sinceV)
+      // docs unchanged: a true no-op when the dense arm is unchanged too,
+      // else carry the lexical arm forward and re-pin the dense one
+      return if (vd == H.pinned(ptr, "dense")) H.latest(storage, name)
+        else H.recommit(storage, name, ptr, "dense_version" -> vd)
     val delta = storage.readVersionedSince(docsTable, sinceV,
         toVersion = curV)
       .select(col("doc_id"), col("text"))
       .localCheckpoint()
-    // free the delta checkpoint on every exit (thrown ones included) —
-    // the continuous loop must not pin O(delta) blocks per boundary
     try {
       val nDelta = delta.count()
       if (nDelta == 0L)
-        // maintenance-only advance (compaction, empty batches):
-        // nothing to score — re-pin the consumed version so future
-        // refreshes diff from here
         return H.recommit(storage, name, ptr, "dense_version" -> vd,
           "docs_version" -> curV)
       val dfRel = H.read(storage, name, ptr, "lexstats")
       val deltaPost = graft.streaming.DocStreams.bm25PostingsFrozen(
         delta, dfRel, H.get(ptr, "n_docs"), H.get(ptr, "sum_dl"))
-      // append ONTO the pointer's pinned postings version, never
-      // "latest" — a crashed earlier refresh's orphan postings version
-      // must not be stacked on (see refreshAnnIndex's lists append)
-      val vp = storage.appendVersionedOnto(s"${name}__postings",
-        deltaPost, ptr.getAs[Long]("postings_version"))
+      val vp = H.appendOnto(storage, name, ptr, "postings", deltaPost)
       H.recommit(storage, name, ptr, "postings_version" -> vp,
         "dense_version" -> vd, "docs_version" -> curV,
         "stale_docs" -> (H.get(ptr, "stale_docs") + nDelta))
@@ -1338,7 +1259,7 @@ object Corpus {
   def rebuildHybridPostings(storage: graft.sources.Storage, name: String,
       docsTable: String): Long = {
     exactPostingsCommit(storage, name, docsTable,
-      Pointers.Hybrid.row(storage, name).getAs[Long]("dense_version"))
+      Pointers.Hybrid.pinned(Pointers.Hybrid.row(storage, name), "dense"))
   }
 
   /** Shared exact-postings commit: rebuild postings + frozen stats
@@ -1351,7 +1272,7 @@ object Corpus {
     require(dvs.nonEmpty, s"no versioned docs table '$docsTable'")
     val curV = dvs.last
     val docs = storage.readVersioned(docsTable, curV)
-    val vp = storage.putVersioned(s"${name}__postings",
+    val vp = Pointers.Hybrid.put(storage, name, "postings",
       graft.streaming.DocStreams.bm25Postings(docs))
     // ONE tokenize pass total: df and sum_dl derive from the
     // committed postings, n_docs from a metadata-cheap count
@@ -1364,11 +1285,10 @@ object Corpus {
     */
   def loadHybridIndex(storage: graft.sources.Storage, name: String,
       version: Long = -1L): HybridIndex = {
-    val ptr = Pointers.Hybrid.row(storage, name, version)
-    HybridIndex(
-      Pointers.Hybrid.read(storage, name, ptr, "postings").localCheckpoint(),
-      loadAnnIndex(storage, s"${name}__dense",
-        ptr.getAs[Long]("dense_version")))
+    val H = Pointers.Hybrid
+    val ptr = H.row(storage, name, version)
+    HybridIndex(H.load(storage, name, ptr, "postings"),
+      loadAnnIndex(storage, H.nested(name, "dense"), H.pinned(ptr, "dense")))
   }
 
   /** CONTINUOUS ingestion with CONTINUOUS index maintenance — the
@@ -1413,12 +1333,9 @@ object Corpus {
       compactEvery: Int = 0, vacuumKeep: Int = 0,
       id: String = "vec_id", vec: String = "embedding")
       : org.apache.spark.sql.streaming.StreamingQuery =
-    sinkRefreshLoop(ds, storage, corpusTable, checkpointDir,
-      refreshEvery, trigger, compactEvery, vacuumKeep,
-      refresh = () => { refreshAnnIndex(storage, indexName, corpusTable,
-        id, vec); () },
-      consumedVersion = () =>
-        Pointers.Ann.consumed(storage, indexName, "corpus"))
+    sinkRefreshLoop(ds, storage, corpusTable, checkpointDir, refreshEvery,
+      trigger, compactEvery, vacuumKeep, Pointers.Ann, indexName, "corpus")(
+      refreshAnnIndex(storage, indexName, corpusTable, id, vec))
 
   /** [[sinkWithAnnRefresh]] for a persisted [[IvfPqIndex]] — the
     * flagship 100 TB index's continuous loop as one verb: same
@@ -1434,12 +1351,9 @@ object Corpus {
       compactEvery: Int = 0, vacuumKeep: Int = 0,
       id: String = "vec_id", vec: String = "embedding")
       : org.apache.spark.sql.streaming.StreamingQuery =
-    sinkRefreshLoop(ds, storage, corpusTable, checkpointDir,
-      refreshEvery, trigger, compactEvery, vacuumKeep,
-      refresh = () => { refreshIvfPqIndex(storage, indexName,
-        corpusTable, id, vec); () },
-      consumedVersion = () =>
-        Pointers.IvfPq.consumed(storage, indexName, "corpus"))
+    sinkRefreshLoop(ds, storage, corpusTable, checkpointDir, refreshEvery,
+      trigger, compactEvery, vacuumKeep, Pointers.IvfPq, indexName, "corpus")(
+      refreshIvfPqIndex(storage, indexName, corpusTable, id, vec))
 
   /** [[sinkWithAnnRefresh]] for a persisted [[HybridIndex]] — the
     * retrieval shape a production RAG corpus serves, as one continuous
@@ -1477,12 +1391,9 @@ object Corpus {
         org.apache.spark.sql.streaming.Trigger.AvailableNow(),
       compactEvery: Int = 0, vacuumKeep: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    sinkRefreshLoop(ds, storage, vectorsTable, checkpointDir,
-      refreshEvery, trigger, compactEvery, vacuumKeep,
-      refresh = () => { refreshHybridIndex(storage, indexName,
-        docsTable, vectorsTable); () },
-      consumedVersion = () =>
-        Pointers.Hybrid.consumed(storage, indexName, "corpus"))
+    sinkRefreshLoop(ds, storage, vectorsTable, checkpointDir, refreshEvery,
+      trigger, compactEvery, vacuumKeep, Pointers.Hybrid, indexName, "corpus")(
+      refreshHybridIndex(storage, indexName, docsTable, vectorsTable))
 
   /** [[sinkWithAnnRefresh]] for a persisted [[RankModel]] — the
     * TextRank family's continuous loop as one verb: the DOCS stream
@@ -1507,40 +1418,30 @@ object Corpus {
         org.apache.spark.sql.streaming.Trigger.AvailableNow(),
       compactEvery: Int = 0, vacuumKeep: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    sinkRefreshLoop(ds, storage, docsTable, checkpointDir,
-      refreshEvery, trigger, compactEvery, vacuumKeep,
-      refresh = () => { refreshRankModel(storage, modelName, docsTable); () },
-      consumedVersion = () =>
-        Pointers.TextRank.consumed(storage, modelName, "docs"))
+    sinkRefreshLoop(ds, storage, docsTable, checkpointDir, refreshEvery,
+      trigger, compactEvery, vacuumKeep, Pointers.TextRank, modelName, "docs")(
+      refreshRankModel(storage, modelName, docsTable))
 
-  /** The ONE continuous-loop shape both index families share: a
+  /** The ONE continuous-loop shape the index families share: a
     * synchronous catch-up refresh before the stream starts, the
     * exactly-once sink with the refresh chained on every
-    * `refreshEvery`-th committed batch, and refresh-AWARE vacuum (the
-    * last `vacuumKeep` versions PLUS everything at or after the
-    * pointer's consumed corpus version — the consumed version is
-    * structurally un-vacuumable no matter how the cadences
-    * interleave; see [[sinkWithAnnRefresh]]'s scaladoc for the full
-    * contract).
+    * `refreshEvery`-th committed batch, and refresh-AWARE vacuum
+    * ([[Pointers.retainConsumed]] at the version `layout` records as
+    * consumed; see [[sinkWithAnnRefresh]]'s scaladoc for the contract).
     */
   private def sinkRefreshLoop(ds: DataFrame,
       storage: graft.sources.Storage, corpusTable: String,
       checkpointDir: String, refreshEvery: Int,
       trigger: org.apache.spark.sql.streaming.Trigger,
-      compactEvery: Int, vacuumKeep: Int,
-      refresh: () => Unit, consumedVersion: () => Long)
+      compactEvery: Int, vacuumKeep: Int, layout: PointerLayout,
+      name: String, consumedRole: String)(refresh: => Long)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     require(refreshEvery > 0, s"refreshEvery must be > 0, got $refreshEvery")
     def refreshAndVacuum(): Unit = {
-      refresh()
-      if (vacuumKeep > 0) {
-        val consumed = consumedVersion()
-        val vs = storage.versions(corpusTable)
-        storage.vacuumVersionsKeeping(corpusTable,
-          vs.takeRight(vacuumKeep).toSet ++ vs.filter(_ >= consumed),
-          writer = checkpointDir) // the loop owns the table it vacuums
-        ()
-      }
+      refresh
+      if (vacuumKeep > 0)
+        Pointers.retainConsumed(storage, corpusTable, vacuumKeep,
+          layout.consumed(storage, name, consumedRole), writer = checkpointDir)
     }
     // catch-up BEFORE starting: re-covers a crash-lost boundary and
     // the previous AvailableNow run's tail, with zero training
@@ -1579,11 +1480,11 @@ object Corpus {
     */
   def saveIvfPqIndex(index: IvfPqIndex, storage: graft.sources.Storage,
       name: String, corpusVersion: Long): Long = {
-    val vc = saveAnnIndex(index.ann, storage, s"${name}__coarse")
-    val vb = storage.putVersioned(s"${name}__codebooks", index.codebooks)
-    val vk = storage.putVersioned(s"${name}__codes", index.codes)
-    Pointers.IvfPq.commit(storage, name, "coarse_version" -> vc,
-      "codebooks_version" -> vb, "codes_version" -> vk,
+    val Q = Pointers.IvfPq
+    Q.commit(storage, name,
+      "coarse_version" -> saveAnnIndex(index.ann, storage, Q.nested(name, "coarse")),
+      "codebooks_version" -> Q.put(storage, name, "codebooks", index.codebooks),
+      "codes_version" -> Q.put(storage, name, "codes", index.codes),
       "corpus_version" -> corpusVersion)
   }
 
@@ -1593,12 +1494,11 @@ object Corpus {
     */
   def loadIvfPqIndex(storage: graft.sources.Storage, name: String,
       version: Long = -1L): IvfPqIndex = {
-    val ptr = Pointers.IvfPq.row(storage, name, version)
+    val Q = Pointers.IvfPq
+    val ptr = Q.row(storage, name, version)
     IvfPqIndex(
-      loadAnnIndex(storage, s"${name}__coarse",
-        ptr.getAs[Long]("coarse_version")),
-      Pointers.IvfPq.read(storage, name, ptr, "codebooks").localCheckpoint(),
-      Pointers.IvfPq.read(storage, name, ptr, "codes").localCheckpoint())
+      loadAnnIndex(storage, Q.nested(name, "coarse"), Q.pinned(ptr, "coarse")),
+      Q.load(storage, name, ptr, "codebooks"), Q.load(storage, name, ptr, "codes"))
   }
 
   /** CDC-driven incremental maintenance of a persisted [[IvfPqIndex]]
@@ -1615,43 +1515,23 @@ object Corpus {
   def refreshIvfPqIndex(storage: graft.sources.Storage, name: String,
       corpusTable: String, id: String = "vec_id",
       vec: String = "embedding"): Long = {
-    val ptr = Pointers.IvfPq.row(storage, name)
-    val sinceV = ptr.getAs[Long]("corpus_version")
-    require(sinceV >= 0L,
-      s"index '$name' was saved without a corpus version; re-save with " +
-        "saveIvfPqIndex(index, storage, name, corpusVersion) to enable " +
-        "incremental refresh")
-    val vcs = storage.versions(corpusTable)
-    require(vcs.nonEmpty, s"no versioned corpus table '$corpusTable'")
-    val curV = vcs.last
-    if (curV == sinceV) return Pointers.IvfPq.latest(storage, name)
-    val delta = storage.readVersionedSince(corpusTable, sinceV,
-        toVersion = curV)
-      .select(col(id).as("vec_id"), col(vec).as("embedding"))
-      .localCheckpoint()
-    // free the eager checkpoints on EVERY exit, thrown ones included
-    // (see refreshAnnIndex)
-    try {
-      val nDelta = delta.count()
-      if (nDelta == 0L)
-        return Pointers.IvfPq.recommit(storage, name, ptr,
-          "corpus_version" -> curV)
-      // coarse arm: frozen-centroid assignment onto the pinned lists. The
-      // nested coarse pointer mirrors the family's drift count — its
-      // corpus checkpoint stays -1 (a direct refresh must refuse)
-      val vCoarseNew = annFold(storage, s"${name}__coarse",
-        Pointers.Ann.row(storage, s"${name}__coarse",
-          ptr.getAs[Long]("coarse_version")), delta, nDelta, -1L)
-      // pq arm: frozen-codebook kernel encode onto the pinned codes
-      val vkNew = storage.appendVersionedOnto(s"${name}__codes",
-        graft.operators.Similarity.kernelEncodePq(delta,
-          Pointers.IvfPq.read(storage, name, ptr, "codebooks")),
-        ptr.getAs[Long]("codes_version"))
-      Pointers.IvfPq.recommit(storage, name, ptr,
-        "coarse_version" -> vCoarseNew, "codes_version" -> vkNew,
-        "corpus_version" -> curV,
-        "stale_rows" -> (Pointers.IvfPq.get(ptr, "stale_rows") + nDelta))
-    } finally graft.operators.Artifacts.freeLocalCheckpoint(delta)
+    val Q = Pointers.IvfPq
+    Q.refresh(storage, name, "corpus", corpusTable,
+        _.select(col(id).as("vec_id"), col(vec).as("embedding"))) {
+      (ptr, delta, n, head) =>
+        // coarse arm: frozen-centroid assignment onto the pinned lists. The
+        // nested coarse pointer mirrors the family's drift count — its
+        // corpus checkpoint stays -1 (a direct refresh must refuse)
+        val vc = annFold(storage, Q.nested(name, "coarse"),
+          Q.nestedRow(storage, name, ptr, "coarse"), delta, n, -1L)
+        // pq arm: frozen-codebook kernel encode onto the pinned codes
+        val vk = Q.appendOnto(storage, name, ptr, "codes",
+          graft.operators.Similarity.kernelEncodePq(delta,
+            Q.read(storage, name, ptr, "codebooks")))
+        Q.recommit(storage, name, ptr, "coarse_version" -> vc,
+          "codes_version" -> vk, "corpus_version" -> head,
+          "stale_rows" -> (Q.get(ptr, "stale_rows") + n))
+    }
   }
 
   /** [[compactAnnIndex]] for a persisted IVF×PQ family: the coarse
@@ -1720,9 +1600,10 @@ object Corpus {
   def savePairMiningBase(base: PairMiningBase,
       storage: graft.sources.Storage, name: String,
       docsVersion: Long = -1L, vectorsVersion: Long = -1L): Long = {
-    val vi = saveAnnIndex(base.index, storage, s"${name}__index")
-    val vf = storage.putVersioned(s"${name}__fps", base.fingerprints)
-    Pointers.PairMining.commit(storage, name, "fps_version" -> vf,
+    val P = Pointers.PairMining
+    val vi = saveAnnIndex(base.index, storage, P.nested(name, "index"))
+    P.commit(storage, name,
+      "fps_version" -> P.put(storage, name, "fps", base.fingerprints),
       "index_version" -> vi, "docs_version" -> docsVersion,
       "vectors_version" -> vectorsVersion)
   }
@@ -1734,11 +1615,11 @@ object Corpus {
     */
   def loadPairMiningBase(storage: graft.sources.Storage, name: String,
       version: Long = -1L): PairMiningBase = {
-    val ptr = Pointers.PairMining.row(storage, name, version)
+    val P = Pointers.PairMining
+    val ptr = P.row(storage, name, version)
     PairMiningBase(
-      loadAnnIndex(storage, s"${name}__index",
-        ptr.getAs[Long]("index_version")),
-      Pointers.PairMining.read(storage, name, ptr, "fps").localCheckpoint())
+      loadAnnIndex(storage, P.nested(name, "index"), P.pinned(ptr, "index")),
+      P.load(storage, name, ptr, "fps"))
   }
 
   /** CDC-driven incremental maintenance of a persisted
@@ -1768,40 +1649,34 @@ object Corpus {
     */
   def refreshPairMiningBase(storage: graft.sources.Storage, name: String,
       docsTable: String, vectorsTable: String): Long = {
-    val ptr0 = Pointers.PairMining.row(storage, name)
-    val dv = ptr0.getAs[Long]("docs_version")
-    val vv = ptr0.getAs[Long]("vectors_version")
+    val P = Pointers.PairMining
+    val ptr = P.row(storage, name)
+    val (dv, vv) = (P.pinned(ptr, "docs"), P.pinned(ptr, "vectors"))
     require(dv >= 0L && vv >= 0L,
       s"base '$name' was saved without corpus versions; re-save with " +
         "savePairMiningBase(base, storage, name, docsVersion, " +
         "vectorsVersion) to enable incremental refresh")
-    // both windows PINNED to the versions the pointer will record as
-    // consumed (see refreshAnnIndex — a concurrent ingest landing
-    // between "resolve latest" and "read delta" would otherwise be
-    // consumed tonight and re-consumed forever)
+    // the consume step of PointerLayout.refresh over TWO windows, each
+    // pinned to the head the pointer will record as consumed; the
+    // emptiness that matters is the QA survivors', not either window's
     val dCur = storage.versions(docsTable).last
     val vCur = storage.versions(vectorsTable).last
-    if (dCur == dv && vCur == vv)
-      return Pointers.PairMining.latest(storage, name)
-    val vf = ptr0.getAs[Long]("fps_version")
-    val baseFps = Pointers.PairMining.read(storage, name, ptr0, "fps")
+    if (dCur == dv && vCur == vv) return P.latest(storage, name)
     val deltaKept = graft.operators.Pipeline
       .qualityFp(storage.readVersionedSince(docsTable, dv,
         toVersion = dCur))
       .groupBy(col("fp"))
       .agg(org.apache.spark.sql.functions.min(col("doc_id")).as("vec_id"))
-      .join(baseFps.select(col("fp")), Seq("fp"), "left_anti")
+      .join(P.read(storage, name, ptr, "fps").select(col("fp")), Seq("fp"),
+        "left_anti")
       .localCheckpoint()
-    // free the eager checkpoints on EVERY exit, thrown ones included
-    // (see refreshAnnIndex)
     try {
       if (deltaKept.isEmpty)
         // maintenance-only advance or a delta with no new QA survivors:
-        // nothing to fold — re-pin the consumed versions only, committing
-        // no junk empty directories into either artifact lineage
-        return Pointers.PairMining.recommit(storage, name, ptr0,
+        // re-pin the consumed versions only
+        return P.recommit(storage, name, ptr,
           "docs_version" -> dCur, "vectors_version" -> vCur)
-      val vfNew = storage.appendVersionedOnto(s"${name}__fps", deltaKept, vf)
+      val vfNew = P.appendOnto(storage, name, ptr, "fps", deltaKept)
       // checkpointed ONCE: the drift count below and the assignment
       // kernel would otherwise each re-run the since-read + join
       val newVecs = storage.readVersionedSince(vectorsTable, vv,
@@ -1814,11 +1689,10 @@ object Corpus {
         // the centroids/lists pair the delta assigns under; its corpus
         // stays -1 (a direct refresh must refuse), stale_rows mirrors
         // the vectors assigned under the frozen base centroids
-        val viNew = annFold(storage, s"${name}__index",
-          Pointers.Ann.row(storage, s"${name}__index",
-            ptr0.getAs[Long]("index_version")),
+        val viNew = annFold(storage, P.nested(name, "index"),
+          P.nestedRow(storage, name, ptr, "index"),
           newVecs, newVecs.count(), -1L)
-        Pointers.PairMining.commit(storage, name, "fps_version" -> vfNew,
+        P.commit(storage, name, "fps_version" -> vfNew,
           "index_version" -> viNew, "docs_version" -> dCur,
           "vectors_version" -> vCur)
       } finally graft.operators.Artifacts.freeLocalCheckpoint(newVecs)
@@ -1889,16 +1763,12 @@ object Corpus {
           storage.batchHorizon(vectorsTable)) return
       refreshPairMiningBase(storage, baseName, docsTable, vectorsTable)
       if (vacuumKeep > 0) {
-        val ptr = Pointers.PairMining.row(storage, baseName)
-        def vac(table: String, consumed: Long): Unit = {
-          val vs = storage.versions(table)
-          storage.vacuumVersionsKeeping(table,
-            vs.takeRight(vacuumKeep).toSet ++ vs.filter(_ >= consumed),
-            writer = checkpointDir)
-          ()
+        val P = Pointers.PairMining
+        val ptr = P.row(storage, baseName)
+        Seq(docsTable -> "docs", vectorsTable -> "vectors").foreach {
+          case (t, role) => Pointers.retainConsumed(storage, t, vacuumKeep,
+            P.pinned(ptr, role), writer = checkpointDir)
         }
-        vac(docsTable, ptr.getAs[Long]("docs_version"))
-        vac(vectorsTable, ptr.getAs[Long]("vectors_version"))
       }
     }
     // catch-up BEFORE starting: re-covers a crash-lost boundary and the

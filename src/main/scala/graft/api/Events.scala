@@ -2,29 +2,30 @@ package graft.api
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 
-import graft.operators.{AsOfJoin, EventAnalytics}
+import graft.operators.EventAnalytics
 import graft.streaming.{DocStreams, EventStreams}
 
 /** DataFrame/Dataset-first event-stream API: the engine's temporal
   * operators over ANY frames with the right columns, batch or
   * streaming. Thin, documented delegates to the same cores the gated
-  * queries run — no second implementation.
+  * queries run; both as-of verbs run the one as-of exec.
   */
 object Events {
 
   /** As-of (nearest-prior) join: for every probe row, attach the build
     * row with the greatest `buildTs <= probeTs` within the same key
-    * (inner semantics). One shuffle on the key, one per-group sort, no
-    * range explosion — see [[graft.operators.AsOfJoin.join]].
+    * (inner semantics) as an `asof` struct; the two sides may share
+    * column names. Two co-partitioned sorted children and one merge
+    * pass, no range explosion — see [[graft.plans.AsOf.joinNested]].
     */
   def asOfJoin(probe: DataFrame, build: DataFrame, probeKey: String,
       buildKey: String, probeTs: String, buildTs: String): DataFrame =
-    AsOfJoin.join(probe, build, probeKey, buildKey, probeTs, buildTs)
+    graft.plans.AsOf.joinNested(probe, build, probeKey, buildKey, probeTs,
+      buildTs)
 
-  /** The same as-of join through the custom sorted-merge physical
-    * operator ([[graft.plans.AsOf.join]]): two co-partitioned sorted
-    * children and one merge pass — no union padding; output columns are
-    * flat `probe ++ build` instead of an `asof` struct.
+  /** [[asOfJoin]] with flat output columns `probe ++ build` instead of
+    * an `asof` struct ([[graft.plans.AsOf.join]]); the sides' column
+    * names must then be distinct.
     */
   def asOfJoinMerge(probe: DataFrame, build: DataFrame, probeKey: String,
       buildKey: String, probeTs: String, buildTs: String): DataFrame =
@@ -264,7 +265,8 @@ object Events {
   private[graft] def affectedActivity(storage: graft.sources.Storage,
       name: String, actVersion: Long, affected: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.{col, hash, lit, pmod}
-    val snap = storage.readVersioned(s"${name}__act", actVersion)
+    val snap =
+      storage.readVersioned(Pointers.Ledger.table(name, "activity"), actVersion)
     val pruned =
       if (!snap.columns.contains("bucket")) snap
       else {
@@ -291,11 +293,12 @@ object Events {
     require(vcs.nonEmpty, s"no versioned events table '$eventsTable'")
     val curV = vcs.last
     val act = activityOf(storage.readVersioned(eventsTable, curV))
-    val ledger = EventAnalytics.growthAccounting(act)
-    val va = storage.putVersioned(s"${name}__act", bucketedAct(act))
-    val vl = storage.putVersioned(s"${name}__ledger", ledger)
-    Pointers.Ledger.commit(storage, name, "act_version" -> va,
-      "ledger_version" -> vl, "events_version" -> curV)
+    val L = Pointers.Ledger
+    L.commit(storage, name,
+      "act_version" -> L.put(storage, name, "activity", bucketedAct(act)),
+      "ledger_version" ->
+        L.put(storage, name, "ledger", EventAnalytics.growthAccounting(act)),
+      "events_version" -> curV)
   }
 
   /** The ledger at the pointer's pinned version (time-travel with
@@ -328,76 +331,58 @@ object Events {
   def refreshGrowthLedger(storage: graft.sources.Storage,
       eventsTable: String, name: String): Long = {
     import org.apache.spark.sql.functions.{coalesce, col, count, lit}
-    val ptr = Pointers.Ledger.row(storage, name)
-    val sinceV = ptr.getAs[Long]("events_version")
-    val va = ptr.getAs[Long]("act_version")
-    val vl = ptr.getAs[Long]("ledger_version")
-    val vcs = storage.versions(eventsTable)
-    require(vcs.nonEmpty, s"no versioned events table '$eventsTable'")
-    val curV = vcs.last
-    if (curV == sinceV) return Pointers.Ledger.latest(storage, name)
-    val free = graft.operators.Artifacts.freeLocalCheckpoint _
-    // pinned to curV — the version the pointer records as consumed
-    // (resolving "latest" twice races a concurrent ingest append)
-    val deltaAct = activityOf(
-      storage.readVersionedSince(eventsTable, sinceV, toVersion = curV))
-      .localCheckpoint()
-    try {
-      if (deltaAct.isEmpty)
-        // maintenance-only advance (compaction, empty batches): re-pin
-        // so future refreshes diff from here
-        return Pointers.Ledger.recommit(storage, name, ptr,
-          "events_version" -> curV)
-      val affected = deltaAct.select(col("user_id")).distinct()
-      // bucket-pruned: only the files of touched buckets are read —
-      // see [[affectedActivity]]; the prune is plan-audited in
-      // EventsLedgerSpec
-      val oldActAff = affectedActivity(storage, name, va, affected)
-        .localCheckpoint()
-      try {
-        val newRows =
-          deltaAct.join(oldActAff, Seq("user_id", "day"), "left_anti")
-        if (newRows.isEmpty)
-          // the delta only re-asserted known (user, day) activity: the
-          // ledger cannot have changed — re-pin, write nothing
-          return Pointers.Ledger.recommit(storage, name, ptr,
-            "events_version" -> curV)
-        val newActAff = oldActAff.unionAll(deltaAct)
-          .groupBy(col("user_id"), col("day")).agg(count(lit(1)).as("n"))
-          .drop("n")
-        val oldC = EventAnalytics.growthAccounting(oldActAff)
-        val newC = EventAnalytics.growthAccounting(newActAff)
-        def tag(side: DataFrame, t: String) = side.select(
-          col("day") +: LedgerCols.map(c => col(c).as(c + t)): _*)
-        val diff = tag(newC, "_n").join(tag(oldC, "_o"), Seq("day"),
-            "full_outer")
-          .select(col("day") +: LedgerCols.map(c =>
-            (coalesce(col(c + "_n"), lit(0L)) -
-              coalesce(col(c + "_o"), lit(0L))).as(c + "_d")): _*)
-        val merged = storage.readVersioned(s"${name}__ledger", vl)
-          .join(diff, Seq("day"), "full_outer")
-          .select(col("day") +: LedgerCols.map(c =>
-            (coalesce(col(c), lit(0L)) +
-              coalesce(col(c + "_d"), lit(0L))).as(c)): _*)
-          // a fully-cancelled day (its only contributors reclassified
-          // away) must vanish, as it would in a from-scratch ledger
-          .filter(LedgerCols.map(col(_) =!= 0L).reduce(_ || _))
-        val vl2 = storage.putVersioned(s"${name}__ledger", merged)
-        // the appended delta dirs carry the SAME layout as the base
-        // snapshot: bucketed onto a bucketed base (so future refreshes
-        // prune them identically), raw onto a legacy unbucketed base
-        // (appending a bucket column there would trip the append
-        // schema gate and wedge every nightly refresh)
-        val newActRows =
-          if (storage.readVersioned(s"${name}__act", va)
-              .columns.contains("bucket")) bucketedAct(newRows)
-          else newRows
-        val va2 = storage.appendVersionedOnto(s"${name}__act",
-          newActRows, va)
-        Pointers.Ledger.commit(storage, name, "act_version" -> va2,
-          "ledger_version" -> vl2, "events_version" -> curV)
-      } finally free(oldActAff)
-    } finally free(deltaAct)
+    val L = Pointers.Ledger
+    L.refresh(storage, name, "events", eventsTable, activityOf) {
+      (ptr, deltaAct, _, head) =>
+        val affected = deltaAct.select(col("user_id")).distinct()
+        // bucket-pruned: only the files of touched buckets are read —
+        // see [[affectedActivity]]; the prune is plan-audited in
+        // EventsLedgerSpec
+        val oldActAff = affectedActivity(storage, name,
+          L.pinned(ptr, "activity"), affected).localCheckpoint()
+        try {
+          val newRows =
+            deltaAct.join(oldActAff, Seq("user_id", "day"), "left_anti")
+          // a delta that only re-asserted known (user, day) activity
+          // cannot have changed the ledger — re-pin, write nothing
+          if (newRows.isEmpty)
+            L.recommit(storage, name, ptr, "events_version" -> head)
+          else {
+            val newActAff = oldActAff.unionAll(deltaAct)
+              .groupBy(col("user_id"), col("day")).agg(count(lit(1)).as("n"))
+              .drop("n")
+            val oldC = EventAnalytics.growthAccounting(oldActAff)
+            val newC = EventAnalytics.growthAccounting(newActAff)
+            def tag(side: DataFrame, t: String) = side.select(
+              col("day") +: LedgerCols.map(c => col(c).as(c + t)): _*)
+            val diff = tag(newC, "_n").join(tag(oldC, "_o"), Seq("day"),
+                "full_outer")
+              .select(col("day") +: LedgerCols.map(c =>
+                (coalesce(col(c + "_n"), lit(0L)) -
+                  coalesce(col(c + "_o"), lit(0L))).as(c + "_d")): _*)
+            val merged = L.read(storage, name, ptr, "ledger")
+              .join(diff, Seq("day"), "full_outer")
+              .select(col("day") +: LedgerCols.map(c =>
+                (coalesce(col(c), lit(0L)) +
+                  coalesce(col(c + "_d"), lit(0L))).as(c)): _*)
+              // a fully-cancelled day (its only contributors reclassified
+              // away) must vanish, as it would in a from-scratch ledger
+              .filter(LedgerCols.map(col(_) =!= 0L).reduce(_ || _))
+            val vl = L.put(storage, name, "ledger", merged)
+            // the appended delta dirs carry the SAME layout as the base
+            // snapshot: bucketed onto a bucketed base (so future refreshes
+            // prune them identically), raw onto a legacy unbucketed base
+            // (appending a bucket column there would trip the append
+            // schema gate and wedge every nightly refresh)
+            val bucketed =
+              L.read(storage, name, ptr, "activity").columns.contains("bucket")
+            val va = L.appendOnto(storage, name, ptr, "activity",
+              if (bucketed) bucketedAct(newRows) else newRows)
+            L.commit(storage, name, "act_version" -> va,
+              "ledger_version" -> vl, "events_version" -> head)
+          }
+        } finally graft.operators.Artifacts.freeLocalCheckpoint(oldActAff)
+    }
   }
 
   /** Pointer-aware retention for a ledger family: retain the last

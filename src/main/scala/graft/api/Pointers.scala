@@ -31,11 +31,12 @@ private[api] final case class Arm(role: String, suffix: String,
 /** A corpus version the pointer checkpoints as consumed. `key` is what
   * [[Corpus.describeIndexes]]'s `corpusTables` map is keyed by, after
   * the index name; `via` names the nested arm whose pointer carries the
-  * column; `optional` drops the row while the version is < 0.
+  * column; `optional` drops the row while the version is < 0; `resave`
+  * is the save call that records it, named when a refresh refuses.
   */
 private[api] final case class Consumed(role: String, column: String,
     key: String = "", via: Option[String] = None,
-    optional: Boolean = false) extends Pin
+    optional: Boolean = false, resave: String = "") extends Pin
 
 /** A persisted family's one-row pointer table `<name><pointer>`: its
   * columns in stored order, each with the value assumed when an older
@@ -61,6 +62,26 @@ private[api] final case class PointerLayout(pointer: String, family: String,
   private def arm(role: String): Arm = arms.find(_.role == role)
     .getOrElse(throw new IllegalArgumentException(s"no $family arm '$role'"))
 
+  private def consumedPin(role: String): Consumed = pins
+    .collectFirst { case c: Consumed if c.role == role => c }
+    .getOrElse(throw new IllegalArgumentException(s"no $family pin '$role'"))
+
+  /** The version pointer row `ptr` records under pin `role`. */
+  def pinned(ptr: Row, role: String): Long = get(ptr, arms.find(_.role == role)
+    .fold(consumedPin(role).column)(_.column))
+
+  /** The table of arm `role` of family `name`. */
+  def table(name: String, role: String): String = arm(role).table(name)
+
+  /** The name of the family nested under arm `role` of family `name`. */
+  def nested(name: String, role: String): String = name + arm(role).suffix
+
+  /** That nested family's pointer row at the version `ptr` pins, never
+    * its latest (a crashed refresh can strand a newer orphan there).
+    */
+  def nestedRow(storage: Storage, name: String, ptr: Row, role: String): Row =
+    arm(role).nested.get.row(storage, nested(name, role), pinned(ptr, role))
+
   /** The latest pointer version of family `name`. */
   def latest(storage: Storage, name: String): Long =
     storage.versions(name + pointer).last
@@ -70,25 +91,70 @@ private[api] final case class PointerLayout(pointer: String, family: String,
     Corpus.pointerRow(storage, name + pointer, version)
 
   /** Arm `role` of family `name` at the version pointer row `ptr` pins. */
-  def read(storage: Storage, name: String, ptr: Row, role: String): DataFrame = {
-    val a = arm(role)
-    storage.readVersioned(a.table(name), get(ptr, a.column))
-  }
+  def read(storage: Storage, name: String, ptr: Row, role: String): DataFrame =
+    storage.readVersioned(table(name, role), pinned(ptr, role))
+
+  /** [[read]] as the session-local checkpoint a loaded handle serves. */
+  def load(storage: Storage, name: String, ptr: Row, role: String): DataFrame =
+    read(storage, name, ptr, role).localCheckpoint()
+
+  /** Commit `df` as a new version of arm `role`; returns it. */
+  def put(storage: Storage, name: String, role: String, df: DataFrame): Long =
+    storage.putVersioned(table(name, role), df)
+
+  /** Append `delta` ONTO the version of arm `role` that `ptr` pins, never
+    * onto latest: a refresh that died before its pointer commit leaves an
+    * orphan version there, and stacking on it would serve its rows twice.
+    * So re-runs and double-fired refreshes are idempotent. Returns it.
+    */
+  def appendOnto(storage: Storage, name: String, ptr: Row, role: String,
+      delta: DataFrame): Long =
+    storage.appendVersionedOnto(table(name, role), delta, pinned(ptr, role))
 
   /** The corpus version the latest pointer records as consumed under
-    * `role`. A pin read `via` a nested family comes from that family's
-    * pointer at the version this one pins, never its latest (a crashed
-    * refresh can strand a newer orphan there). It feeds refresh-aware
-    * vacuum keep sets, so each pointer read is one-row guarded.
+    * `role`, read `via` a nested family's pinned row where declared so.
     */
   def consumed(storage: Storage, name: String, role: String): Long = {
     val ptr = row(storage, name)
-    pins.collectFirst { case c: Consumed if c.role == role =>
-      c.via.map(arm).fold(get(ptr, c.column)) { a =>
-        a.nested.get.row(storage, name + a.suffix, get(ptr, a.column))
-          .getAs[Long](c.column)
-      }
-    }.get
+    consumedPin(role).via.fold(pinned(ptr, role)) { a =>
+      arm(a).nested.get.pinned(nestedRow(storage, name, ptr, a), role)
+    }
+  }
+
+  /** The ONE pinned-delta consume step of every CDC refresh. It refuses a
+    * pointer without a `consumedRole` version, then resolves `table`'s
+    * head ONCE: the delta read is pinned to the version the pointer will
+    * record as consumed (re-resolving "latest" races an ingest append,
+    * whose rows would be folded but re-consumed forever). Nothing new:
+    * the latest pointer version, nothing committed. Otherwise `(consumed,
+    * head]` is read through `project`, checkpointed once and counted;
+    * an empty delta (maintenance-only advance) re-pins the consumed
+    * version alone, else `fold(ptr, delta, n, head)` commits the family.
+    * The checkpoint is freed on every exit, thrown ones included.
+    */
+  def refresh(storage: Storage, name: String, consumedRole: String,
+      table: String, project: DataFrame => DataFrame)(
+      fold: (Row, DataFrame, Long, Long) => Long): Long = {
+    val ptr = row(storage, name)
+    val c = consumedPin(consumedRole)
+    val since =
+      if (ptr.schema.fieldNames.contains(c.column)) get(ptr, c.column) else -1L
+    require(since >= 0L, s"$family '$name' was saved without its " +
+      s"$consumedRole version; re-save with ${c.resave} to enable " +
+      "incremental refresh")
+    val vs = storage.versions(table)
+    require(vs.nonEmpty, s"no versioned table '$table'")
+    val head = vs.last
+    if (head == since) return latest(storage, name)
+    val delta = project(storage.readVersionedSince(table, since,
+      toVersion = head)).localCheckpoint()
+    try {
+      // the checkpoint's RDD count: one job, where Dataset.count plans an
+      // aggregate over a shuffle (two jobs under adaptive execution)
+      val n = delta.queryExecution.toRdd.count()
+      if (n == 0L) recommit(storage, name, ptr, c.column -> head)
+      else fold(ptr, delta, n, head)
+    } finally graft.operators.Artifacts.freeLocalCheckpoint(delta)
   }
 
   /** The ONE pointer writer: commit `<name><pointer>` with `pins` set and
@@ -189,7 +255,8 @@ private[api] object Pointers {
       // the last train (the retrain dial)
       Arm("lists", "__lists", "lists_version", accretes = true,
         drift = Some("stale_rows")),
-      Consumed("corpus", "corpus_version")))
+      Consumed("corpus", "corpus_version",
+        resave = "saveAnnIndex(index, storage, name, corpusVersion)")))
 
   val Hybrid = PointerLayout("__hybrid", "hybrid",
     Seq("postings_version" -> None, "dense_version" -> None,
@@ -215,7 +282,8 @@ private[api] object Pointers {
       Arm("codes", "__codes", "codes_version", accretes = true,
         drift = Some("stale_rows")),
       Arm("coarse", "__coarse", "coarse_version", nested = Some(Ann)),
-      Consumed("corpus", "corpus_version")))
+      Consumed("corpus", "corpus_version",
+        resave = "saveIvfPqIndex(index, storage, name, corpusVersion)")))
 
   val PairMining = PointerLayout("__pmb", "pmb",
     Seq("fps_version", "index_version", "docs_version", "vectors_version")
@@ -235,7 +303,8 @@ private[api] object Pointers {
     Seq("pairs_version", "ranks_version", "docs_version").map(_ -> None),
     Seq(Arm("pairs", "__pairs", "pairs_version"),
       Arm("ranks", "__ranks", "ranks_version"),
-      Consumed("docs", "docs_version")))
+      Consumed("docs", "docs_version",
+        resave = "saveRankModel(model, storage, name, docsVersion)")))
 
   /** The persisted growth ledger ([[Events]]); map `name -> events
     * table` for lag.
@@ -244,7 +313,21 @@ private[api] object Pointers {
     Seq("act_version", "ledger_version", "events_version").map(_ -> None),
     Seq(Arm("activity", "__act", "act_version", accretes = true),
       Arm("ledger", "__ledger", "ledger_version"),
-      Consumed("events", "events_version")))
+      Consumed("events", "events_version",
+        resave = "buildGrowthLedger(storage, eventsTable, name)")))
+
+  /** Refresh-aware retention of a consumed corpus table: keep its last
+    * `keepLast` versions PLUS every version at or after `consumed`, so
+    * the version the next refresh diffs from is never reclaimed, however
+    * the cadences interleave. `writer` is the stream owning the table.
+    */
+  def retainConsumed(storage: Storage, table: String, keepLast: Int,
+      consumed: Long, writer: String): Unit = {
+    val vs = storage.versions(table)
+    storage.vacuumVersionsKeeping(table,
+      vs.takeRight(keepLast).toSet ++ vs.filter(_ >= consumed), writer = writer)
+    ()
+  }
 
   val All: Seq[PointerLayout] =
     Seq(Ann, Hybrid, IvfPq, PairMining, Tok, TextRank, Ledger)

@@ -11,13 +11,13 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** As-of join as a first-class operator — the full custom path
-  * (logical BinaryNode → Strategy → physical exec), complementing the
-  * window-composition form in `graft.operators.AsOfJoin` (reference has
-  * no joins at all, SURVEY.md §2e; this is north-star surface).
+  * (logical BinaryNode → Strategy → physical exec), the engine's one
+  * as-of join (reference has no joins at all, SURVEY.md §2e; this is
+  * north-star surface).
   *
-  * The composition unions both sides and runs an `ignoreNulls last`
-  * window — one shuffle of the UNION, carrying null-padded struct
-  * columns for every row. This exec instead declares
+  * The window composition it replaced unioned both sides and ran an
+  * `ignoreNulls last` window — one shuffle of the UNION, carrying
+  * null-padded struct columns for every row. This exec instead declares
   * `ClusteredDistribution` on each side's key and per-child `(key, ts)`
   * ordering, so Catalyst plans two exchanges + two sorts WITHOUT the
   * union padding, and a single merge pass per co-partition pairs each
@@ -159,12 +159,11 @@ object AsOf {
 
   /** As-of join through the custom operator: for every probe row, the
     * build row with the greatest `buildTs <= probeTs` within the same
-    * key; probes with no prior build row drop (inner semantics — the
-    * contract of `graft.operators.AsOfJoin.join`, which this must and
-    * does agree with, see `AsOfPlanSpec`). Column names across the two
-    * sides must be distinct. NULL keys group together and match each
-    * other (grouping semantics, like the window composition) — not SQL
-    * equality, which would drop them.
+    * key; probes with no prior build row drop (inner semantics,
+    * checked against a brute-force scan in `AsOfPlanSpec`). Column
+    * names across the two sides must be distinct ([[joinNested]] lifts
+    * that). NULL keys group together and match each other (grouping
+    * semantics) — not SQL equality, which would drop them.
     */
   def join(probe: DataFrame, build: DataFrame, probeKey: String,
       buildKey: String, probeTs: String, buildTs: String): DataFrame = {
@@ -175,6 +174,21 @@ object AsOf {
       UnresolvedAttribute(probeTs), UnresolvedAttribute(buildTs),
       ColumnBridge.logicalPlan(probe), ColumnBridge.logicalPlan(build))
     ColumnBridge.dataFrame(spark, plan)
+  }
+
+  /** [[join]] with the matched build row nested: the probe's columns
+    * plus an `asof` struct of the build row under its own column names,
+    * so the two sides may share names (`sym`, `t` on both). The build
+    * columns cross the exec prefixed and are re-nested after it.
+    */
+  def joinNested(probe: DataFrame, build: DataFrame, probeKey: String,
+      buildKey: String, probeTs: String, buildTs: String): DataFrame = {
+    import org.apache.spark.sql.functions.{col, struct}
+    val b = "__asof_"
+    join(probe, build.select(build.columns.map(c => col(c).as(b + c)).toIndexedSeq: _*),
+        probeKey, b + buildKey, probeTs, b + buildTs)
+      .select(probe.columns.map(col).toIndexedSeq :+ struct(build.columns
+        .map(c => col(b + c).as(c)).toIndexedSeq: _*).as("asof"): _*)
   }
 
   /** FORWARD as-of join through the same exec: for every probe row,

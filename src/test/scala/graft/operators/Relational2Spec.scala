@@ -66,22 +66,7 @@ class Relational2Spec extends SparkTestBase {
   test("as-of join composition agrees with a brute-force per-row scan") {
     val got = AsOfJoin.stAsofJoin(spark, sf0001).collect()
       .map(r => r.getLong(0) -> (r.getLong(3), r.getLong(4))).toMap
-    // brute force: for every purchase, scan all views of the user
-    val ev = graft.sources.Tables.events(spark, sf0001)
-      .selectExpr("event_id", "user_id", "event_type", "ts_ns DIV 1000 AS ts_us")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getLong(3)))
-    val views = ev.filter(_._3 == "view")
-    val purchases = ev.filter(_._3 == "purchase")
-    val expected = purchases.flatMap { case (pid, u, _, pts) =>
-      val prior = views.filter(v => v._2 == u && v._4 <= pts)
-      if (prior.isEmpty) None
-      else {
-        val bestTs = prior.map(_._4).max
-        val bestId = prior.filter(_._4 == bestTs).map(_._1).max
-        Some(pid -> (bestTs, bestId))
-      }
-    }.toMap
-    assert(got == expected)
+    assert(got == Relational2Spec.asofBruteForce(spark, sf0001))
     assert(got.nonEmpty)
   }
 
@@ -96,5 +81,30 @@ class Relational2Spec extends SparkTestBase {
           r.getString(5))).toMap
     assert(got("k") == ((5L, 4L, 3L, "1", "3")))
     assert(got("s") == ((5L, 4L, 2L, "a", "b")))
+  }
+}
+
+object Relational2Spec {
+
+  /** The as-of purchase → latest prior view pairing by brute force: for
+    * every purchase, scan all views of the user. `event_id ->
+    * (view_us, view_event_id)`, the latter the max id at that µs.
+    */
+  def asofBruteForce(spark: org.apache.spark.sql.SparkSession,
+      dir: String): Map[Long, (Long, Long)] = {
+    val ev = graft.sources.Tables.events(spark, dir)
+      .selectExpr("event_id", "user_id", "event_type", "ts_ns DIV 1000 AS ts_us")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getLong(3)))
+    val views = ev.filter(_._3 == "view")
+    val purchases = ev.filter(_._3 == "purchase")
+    purchases.flatMap { case (pid, u, _, pts) =>
+      val prior = views.filter(v => v._2 == u && v._4 <= pts)
+      if (prior.isEmpty) None
+      else {
+        val bestTs = prior.map(_._4).max
+        val bestId = prior.filter(_._4 == bestTs).map(_._1).max
+        Some(pid -> (bestTs, bestId))
+      }
+    }.toMap
   }
 }
